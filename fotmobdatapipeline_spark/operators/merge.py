@@ -151,7 +151,10 @@ def compact_partitions(
     ``ceil(bytes / target_file_bytes)`` balanced files (>=1);
     partitions already at or under that file count, or under
     ``min_files``, are left untouched (their files are never read,
-    never rewritten, mtimes preserved).
+    never rewritten, mtimes preserved).  ``bytes`` is the on-disk,
+    compressed size of the partition's current data files, so the
+    target file count follows how those files compressed, not the row
+    count.
 
     Mechanics: each selected partition DIRECTORY is read directly (no
     value-typed filter — so lexically distinct values that would
