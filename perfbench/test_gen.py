@@ -59,9 +59,10 @@ def test_leaderboard_truth_matches_a_recount(tmp_path):
 
 
 def test_fixture_edge_cases_present_for_every_seed(tmp_path):
-    for seed in (1, 2, 3):
+    # Two matches: only the forced cases, so chance cannot supply them.
+    for seed in range(1, 11):
         zone = str(tmp_path / str(seed))
-        truth = gen.shots_zone(zone, seed=seed, n_matches=10, shots_per_match=(15, 30),
+        truth = gen.shots_zone(zone, seed=seed, n_matches=2, shots_per_match=(15, 30),
                                n_shards=2)
         matches = _matches(zone)
         homes = {m["general"]["homeTeam"]["name"] for m in matches}
@@ -70,14 +71,15 @@ def test_fixture_edge_cases_present_for_every_seed(tmp_path):
         assert "Tottenham" in homes and "Tottenham" in aways
         assert (103, "Tottenham Hotspur") in truth.teams
         assert all(name != "Tottenham" for _, name in truth.teams)
-        # Two players on different teams share a name (player_dim keyed on name).
-        teams_of = {}
-        for _, s in _shots(zone):
-            teams_of.setdefault(s["playerName"], set()).add(s["teamId"])
-        assert teams_of[gen.SHARED_NAME] >= {103, 105}
-        # A shot with every blocked/xGOT field NULL.
-        assert any(s["blockedX"] is None and s["blockedY"] is None
-                   and s["expectedGoalsOnTarget"] is None for _, s in _shots(zone))
+        # Two players on different teams share a name (player_dim keyed on
+        # name), and one shot has every blocked/xGOT field NULL: both are
+        # placed, not left to the draw.
+        first = {m["matchId"]: m["content"]["shotmap"]["shots"] for m in matches}
+        s00, s01 = first["4000000"][:2]
+        s10 = first["4000001"][0]
+        assert (s00["playerName"], s00["teamId"]) == (gen.SHARED_NAME, 103)
+        assert (s10["playerName"], s10["teamId"]) == (gen.SHARED_NAME, 105)
+        assert s01["blockedX"] is s01["blockedY"] is s01["expectedGoalsOnTarget"] is None
         # One event type occurring with several situations (compound dim).
         sits = {}
         for et, sit in truth.event_types:
