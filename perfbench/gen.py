@@ -127,6 +127,9 @@ def shots_zone(path: str, seed: int, n_matches: int, shots_per_match: tuple[int,
     every blocked/xGOT field NULL; ``Goal`` occurs with two situations.
     """
     rng = random.Random(seed)
+    # Shots per match come from a fixed stream, so every seed writes the
+    # same number of shots and only their content varies.
+    sizes = random.Random(n_matches)
     os.makedirs(path, exist_ok=True)
     shards: list[list[str]] = [[] for _ in range(n_shards)]
     truth = ShotsTruth(n_matches=n_matches, n_shots=0, zone_bytes=0)
@@ -145,7 +148,7 @@ def shots_zone(path: str, seed: int, n_matches: int, shots_per_match: tuple[int,
             names[t] = raw
             truth.teams.add((t, _canon(raw)))
         shots = []
-        n = rng.randint(*shots_per_match)
+        n = sizes.randint(*shots_per_match)
         for j in range(n):
             team = home if rng.random() < 0.5 else away
             player = rng.choice(_roster(team))

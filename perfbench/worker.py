@@ -2,9 +2,9 @@
 
 Order: set up the session several times (``setup_s`` is their median),
 make the workload's inputs, run the first pass (``first_pass_s``, which
-also warms the JVM up), then ``ceil(--seconds / NOMINAL_PASS_S)`` timed
-passes (``pass_s``, ``pass_cpu_s``: medians), then the once-per-run
-checks.
+also warms the JVM up), the workload's untimed warm-up passes, then
+``ceil(--seconds / NOMINAL_PASS_S)`` timed passes (``pass_cpu_s``:
+their mean CPU), then the once-per-run checks.
 Writes the result object to ``<run-dir>/result.json``; with ``--trace``
 also the spans to ``--trace-out``.
 """
@@ -23,14 +23,11 @@ import tracing
 from tracing import Stopwatch, Tracer
 from workloads import CATALOG_ENTRIES, FULL, QUICK, WORKLOADS
 
-SETUPS = 3
-# Nominal seconds of one warm pass at local[2]: a run times
-# ceil(--seconds / NOMINAL_PASS_S) passes, so every run does the same
-# work whatever the box's speed at the time.
-NOMINAL_PASS_S = 3.5
+SETUPS = 5
 
-E2E_UNITS = {"setup_s": "s", "first_pass_s": "s", "pass_s": "s", "pass_cpu_s": "core-s"}
+E2E_UNITS = {"setup_s": "s", "pass_cpu_s": "core-s"}
 PER_LAYER_UNITS = {
+    "first_pass_s": "s", "pass_s": "s",
     "session.start_s": "s", "session.jit_s": "s", "session.gc_s": "s",
     "fotmob.build_s": "s", "fotmob.leaderboard_s": "s",
     "sources.write_star_s": "s", "sources.files_written": "count",
@@ -177,10 +174,11 @@ def main() -> int:
     print(f"[perfbench] inputs {json.dumps(inputs)} in {time.perf_counter() - t0:.1f} s",
           file=sys.stderr)
 
-    n_timed = 0 if args.quick else math.ceil(args.seconds / NOMINAL_PASS_S)
+    n_timed = 0 if args.quick else math.ceil(args.seconds / wl.NOMINAL_PASS_S)
+    n_warm = 0 if args.quick else wl.WARMUP
     walls, cpus, recs = [], [], {}
     jit_gc = (0.0, 0.0)
-    last = n_timed
+    last = n_warm + n_timed
     for n in range(last + 1):
         tracer.pass_no = n
         sw = Stopwatch()
@@ -190,19 +188,22 @@ def main() -> int:
         cpus.append(sw.cpu)
         if n == 0:
             jit_gc = jvm_jit_gc_s(spark)
-    timed = list(range(1, 1 + n_timed)) or [0]
+    timed = list(range(1 + n_warm, last + 1)) or [0]
     t_checks = time.perf_counter()
     wl.final_checks()
     t_checks = time.perf_counter() - t_checks
 
     e2e = {
         "setup_s": statistics.median(setup_s),
-        "first_pass_s": walls[0],
-        "pass_s": statistics.median(walls[p] for p in timed),
-        "pass_cpu_s": statistics.median(cpus[p] for p in timed),
+        # A mean, not a median: CPU per pass still falls from pass to
+        # pass while the JIT compiles, and the pass at which it drops
+        # varies from run to run; the mean over the timed passes does
+        # not depend on where in the window the drop falls.
+        "pass_cpu_s": statistics.mean(cpus[p] for p in timed),
     }
     print(f"[perfbench] {args.workload} seed={args.seed} setups={[round(s, 3) for s in setup_s]} "
-          f"walls={[round(w, 3) for w in walls]} cpus={[round(c, 2) for c in cpus]} "
+          f"warmup={n_warm} walls={[round(w, 3) for w in walls]} "
+          f"cpus={[round(c, 2) for c in cpus]} "
           f"checks_s={t_checks:.1f} steal_s={tracing.steal_s() - steal0:.2f} "
           f"SPARK_GRAFT_CPUS={os.environ.get('SPARK_GRAFT_CPUS')}",
           file=sys.stderr)
@@ -214,6 +215,8 @@ def main() -> int:
         lm = layer_metrics(tracer, timed, recs, os.path.join(args.run_dir, "eventlog"),
                            CATALOG_ENTRIES)
         lm["session.jit_s"], lm["session.gc_s"] = jit_gc
+        lm["first_pass_s"] = walls[0]
+        lm["pass_s"] = statistics.median(walls[p] for p in timed)
         metrics = {k: {"value": lm[k], "unit": u} for k, u in PER_LAYER_UNITS.items()}
         if args.trace_out:
             tracer.dump(args.trace_out)

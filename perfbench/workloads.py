@@ -1,9 +1,13 @@
-"""The three workloads.  Each calls only the package's public functions.
+"""The two workloads.  Each calls only the package's public functions.
+
+``shots_etl`` is the paper's pipeline.  ``llm_data`` is the LLM-data
+side the north star adds: a catalog mix (``CatalogMix``) and a
+streaming document ingest (``DocStream``) in every pass.
 
 A workload makes its inputs in ``prepare`` (outside every metric), runs
 one pass per ``run_pass`` call with only the program's calls inside
-``sw.timed()``, checks each pass's outputs between timed segments, and
-adds its once-per-run checks in ``final_checks``.  Every pass does the
+timed steps (``step``), checks each pass's outputs between the steps,
+and adds its once-per-run checks in ``final_checks``.  Every pass does the
 same work: outputs land in the same places, or in fresh ones.
 
 Every check is one operation; a check that fails, or raises, counts as
@@ -16,6 +20,7 @@ import math
 import os
 import shutil
 import statistics
+from contextlib import contextmanager
 
 import gen
 from tracing import Stopwatch, Tracer
@@ -38,6 +43,13 @@ def dir_files(path: str) -> tuple[int, int]:
 
 class Workload:
     name = ""
+    # Untimed passes between the first pass and the timed ones: CPU per
+    # pass keeps falling for several passes while the JIT compiles.
+    WARMUP = 1
+    # Nominal seconds of one warm pass at local[2]: a run times
+    # ceil(--seconds / NOMINAL_PASS_S) passes, so every run does the same
+    # work whatever the box's speed at the time.
+    NOMINAL_PASS_S = 5.0
 
     def __init__(self, spark, run_dir: str, seed: int, size: str, tracer: Tracer):
         self.spark = spark
@@ -50,6 +62,12 @@ class Workload:
         self.known_failed = 0  # failures of the known-fault operation
         self.errors: list[str] = []
         self.pass_rec: dict = {}  # per-layer counts of the latest pass
+
+    @contextmanager
+    def step(self, sw: Stopwatch, name: str):
+        """One program call: timed by ``sw`` and traced as span ``name``."""
+        with sw.timed(), self.tracer.span(name):
+            yield
 
     def check(self, what: str, ok, known_fault: bool = False) -> None:
         """Count one operation; ``ok`` is a bool or a zero-arg callable.
@@ -104,14 +122,13 @@ class ShotsEtl(Workload):
         from fotmobdatapipeline_spark import fotmob
         from fotmobdatapipeline_spark.sources import sinks
 
-        with sw.timed():
-            with self.tracer.span("fotmob.build"):
-                tables = fotmob.run_pipeline(self.spark, self.zone)
-            with self.tracer.span("sources.write_star"):
-                self.paths = sinks.write_star(tables, self.out)
-            with self.tracer.span("fotmob.leaderboard"):
-                looker = self.spark.read.parquet(self.paths["looker_data"])
-                board = [tuple(r) for r in fotmob.player_xg_leaderboard(looker, self.K).collect()]
+        with self.step(sw, "fotmob.build"):
+            tables = fotmob.run_pipeline(self.spark, self.zone)
+        with self.step(sw, "sources.write_star"):
+            self.paths = sinks.write_star(tables, self.out)
+        with self.step(sw, "fotmob.leaderboard"):
+            looker = self.spark.read.parquet(self.paths["looker_data"])
+            board = [tuple(r) for r in fotmob.player_xg_leaderboard(looker, self.K).collect()]
         if check:
             self.check("leaderboard equals the generator's top-k (sga = xGOT - xG)",
                        board == self.want_board)
@@ -147,11 +164,10 @@ class ShotsEtl(Workload):
                    == sum(v[0] for v in t.per_player.values()))
 
 
-# One entry for each kind in the mix that fits a run's time budget: plain
-# analytics, dedup over the shared-subtree memo, text, and a builder from
-# the slow tail whose builder runs jobs.
+# One entry for each LLM-data kind that fits a run's time budget: dedup
+# over the shared-subtree memo, text, and a builder from the slow tail
+# whose builder runs jobs.
 CATALOG_ENTRIES = (
-    "flagship_revenue_topk",
     "dedup_recall_report",
     "text_quality",
     "events_msprt_monitor",
@@ -164,9 +180,9 @@ def _norm(v):
 
 class CatalogMix(Workload):
     """Catalog entries built by ``queries()[name]`` and run to the noop
-    sink over the seeded tables of ``gen.catalog_tables``."""
+    sink over the seeded tables of ``gen.catalog_tables``.  Half of
+    ``llm_data``."""
 
-    name = "catalog_mix"
     SF = {FULL: 0.01, QUICK: 0.001}
 
     def prepare(self) -> dict:
@@ -179,12 +195,11 @@ class CatalogMix(Workload):
         return {"sf": self.SF[self.size], "entries": len(CATALOG_ENTRIES), **rows}
 
     def run_pass(self, sw: Stopwatch, check: bool) -> None:
-        with sw.timed():
-            for name in CATALOG_ENTRIES:
-                with self.tracer.span(f"plans.build/{name}"):
-                    df = self.queries[name](self.spark, self.sf_dir)
-                with self.tracer.span(f"plans.exec/{name}"):
-                    df.write.format("noop").mode("overwrite").save()
+        for name in CATALOG_ENTRIES:
+            with self.step(sw, f"plans.build/{name}"):
+                df = self.queries[name](self.spark, self.sf_dir)
+            with self.step(sw, f"plans.exec/{name}"):
+                df.write.format("noop").mode("overwrite").save()
 
     def final_checks(self) -> None:
         import duckdb
@@ -220,10 +235,10 @@ class CatalogMix(Workload):
 class DocStream(Workload):
     """Staged day files -> ``streaming.documents.neardup_stream`` ->
     ``streaming.incremental.incremental_partitioned_sink``, then
-    ``operators.merge.compact_partitions`` on the landed table."""
+    ``operators.merge.compact_partitions`` on the landed table.  Half of
+    ``llm_data``."""
 
-    name = "doc_stream"
-    SIZES = {FULL: dict(docs_per_day=500, days=2, n_groups=50, copies=2),
+    SIZES = {FULL: dict(docs_per_day=300, days=2, n_groups=30, copies=2),
              QUICK: dict(docs_per_day=30, days=2, n_groups=4, copies=2)}
     # Larger than a landed day, so each day's per-task files pack into one.
     TARGET_FILE_BYTES = 1 << 20
@@ -265,17 +280,15 @@ class DocStream(Workload):
         base = os.path.join(self.run_dir, f"landed-{self.pass_no}")
         self.pass_no += 1
         table = os.path.join(base, "table")
-        with sw.timed():
-            with self.tracer.span("streaming.drain"):
-                progress = self._drain(self.feed, base)
+        with self.step(sw, "streaming.drain"):
+            progress = self._drain(self.feed, base)
         files, size = dir_files(table)
         before = {d: dir_files(os.path.join(table, d)) for d in os.listdir(table)
                   if d.startswith("event_date=")}
         rows = self._rows(table) if check else None
-        with sw.timed():
-            with self.tracer.span("operators.merge.compact_partitions"):
-                stats = compact_partitions(self.spark, table, "event_date",
-                                           target_file_bytes=self.TARGET_FILE_BYTES)
+        with self.step(sw, "operators.merge.compact_partitions"):
+            stats = compact_partitions(self.spark, table, "event_date",
+                                       target_file_bytes=self.TARGET_FILE_BYTES)
         if check:
             self.check("every distinct document lands; each planted group exactly once",
                        self._landed_ok({r[0] for r in rows}, len(rows)))
@@ -331,4 +344,23 @@ class DocStream(Workload):
         return len(ids) == len(t.distinct_ids)
 
 
-WORKLOADS = {w.name: w for w in (ShotsEtl, CatalogMix, DocStream)}
+class LlmData(CatalogMix, DocStream):
+    """Each pass runs the catalog mix, then drains the document feed and
+    compacts the landed table."""
+
+    name = "llm_data"
+    NOMINAL_PASS_S = 7.5
+
+    def prepare(self) -> dict:
+        return {**CatalogMix.prepare(self), **DocStream.prepare(self)}
+
+    def run_pass(self, sw: Stopwatch, check: bool) -> None:
+        CatalogMix.run_pass(self, sw, check)
+        DocStream.run_pass(self, sw, check)
+
+    def final_checks(self) -> None:
+        CatalogMix.final_checks(self)
+        DocStream.final_checks(self)
+
+
+WORKLOADS = {w.name: w for w in (ShotsEtl, LlmData)}
