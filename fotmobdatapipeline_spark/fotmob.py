@@ -281,12 +281,26 @@ def build_team_dim(clean: DataFrame) -> DataFrame:
 
 
 def build_star(clean: DataFrame) -> dict[str, DataFrame]:
-    """D1-D6 + J1 + P3 (dag:124-153): five dims + the fact table."""
-    match_dim = build_dim(clean, ["matchId"], "match_id")
-    team_dim = build_team_dim(clean)
-    player_dim = build_dim(clean, ["player_name"], "player_id")  # keyed on name, dag:132
-    shot_type_dim = build_dim(clean, ["shot_type"], "shot_type_id")
-    event_type_dim = build_dim(clean, ["event_type", "situation"], "event_type_id")
+    """D1-D6 + J1 + P3 (dag:124-153): five dims + the fact table.
+
+    Each dim is built once: it is a lazy local checkpoint, so its own
+    write, its fact lookup and its ``looker_data`` lookup all read the
+    same materialized rows instead of each re-running the distinct and
+    the dense-key sort.  Under AQE, checkpointing a dim runs its shuffle
+    stages (the distinct and the single-partition sort feed) here, at
+    build time; the key assignment runs at the dim's first use.  The
+    fact is not checkpointed: the ``team_lookup`` guard below still
+    raises when the fact executes."""
+    match_dim, team_dim, player_dim, shot_type_dim, event_type_dim = (
+        dim.localCheckpoint(eager=False)
+        for dim in (
+            build_dim(clean, ["matchId"], "match_id"),
+            build_team_dim(clean),
+            build_dim(clean, ["player_name"], "player_id"),  # keyed on name, dag:132
+            build_dim(clean, ["shot_type"], "shot_type_id"),
+            build_dim(clean, ["event_type", "situation"], "event_type_id"),
+        )
+    )
 
     # J1: the shot joins team_dim on its own teamId (the shooting team,
     # dag:146) — join on teamId only, so the dim lookup must be unique per
@@ -346,7 +360,7 @@ def build_looker_data(star: dict[str, DataFrame]) -> DataFrame:
         dims=[
             (star["match_dim"], "match_id", []),
             (star["player_dim"], "player_id", ["player_name"]),
-            (star["team_dim"].select("team_id", "team_name").distinct(), "team_id", ["team_name"]),
+            (star["team_dim"], "team_id", ["team_name"]),  # team_id is unique per row
             (star["shot_type_dim"], "shot_type_id", ["shot_type"]),
             (star["event_type_dim"], "event_type_id", ["event_type", "situation"]),
         ],
@@ -370,10 +384,23 @@ def player_xg_leaderboard(looker: DataFrame, k: int = 10) -> DataFrame:
 
 
 def run_pipeline(spark, matches_path: str) -> dict[str, DataFrame]:
-    """EP1 equivalent: the whole extract→transform chain as one lazy
-    lineage.  Callers write each returned table (parquet/Delta) to realize
-    the load stage; writes are the only actions."""
-    clean = clean_shots(flatten_shots(read_matches(spark, matches_path)))
+    """EP1 equivalent: the extract→transform chain, flattened once and
+    shared by every table, as the reference flattens once and loads six
+    tables from the result (dag:95-183).  Callers write each returned
+    table (parquet/Delta) to realize the load stage.
+
+    The parsed, cleaned shots are a lazy local checkpoint: there is no
+    shuffle below it, so creating it runs nothing, and its first consumer
+    parses the landing zone once for all seven tables.  The five dims are
+    shared the same way (:func:`build_star`).  Under AQE, checkpointing a
+    dim runs the dim's shuffle stages, so that first consumer is this
+    call: it parses the zone and runs those stages, and the table writes
+    read checkpoint blocks.  Every call makes fresh checkpoints, freed
+    when their frames are garbage-collected, so a call over a
+    regenerated zone reads the new files, never an earlier call's rows."""
+    clean = clean_shots(flatten_shots(read_matches(spark, matches_path))).localCheckpoint(
+        eager=False
+    )
     star = build_star(clean)
     star["looker_data"] = build_looker_data(star)
     return star

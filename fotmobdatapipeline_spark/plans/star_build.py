@@ -113,6 +113,8 @@ def run_star_build(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     dims = {
         name: df.cache()
         for name, df in build_dims(spark, sf_dir, hash_big_dims=hash_big_dims).items()
@@ -136,10 +138,12 @@ def run_star_build(
     # build_dims ever grows a dim, the fact write must never queue
     # behind the dim writes (that would restore the dims-then-fact
     # serialization this overlap removes — ADVICE r14).
+    # The pool threads inherit the caller's job group and tags.
+    write = inheritable_thread_target(spark)(write_parquet)
     with ThreadPoolExecutor(max_workers=len(dims) + 1) as pool:
-        futures = [pool.submit(write_parquet, fact, paths["sales_fact"])]
+        futures = [pool.submit(write, fact, paths["sales_fact"])]
         futures.extend(
-            pool.submit(write_parquet, df, paths[name])
+            pool.submit(write, df, paths[name])
             for name, df in dims.items()
         )
         for f in futures:

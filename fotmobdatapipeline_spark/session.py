@@ -16,6 +16,7 @@ multi-executor deployment even when running local[*]:
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -57,34 +58,52 @@ def get_spark(
     return builder.getOrCreate()
 
 
+_PKG_ZIP: str | None = None  # this process's package zip, built on first use
+_PKG_ZIP_LOCK = threading.Lock()
+
+
+def _package_zip() -> str:
+    """Zip this package's sources once per process, into one temp
+    directory removed at interpreter exit; later calls (and later
+    sessions) reuse the same zip."""
+    global _PKG_ZIP
+    with _PKG_ZIP_LOCK:
+        if _PKG_ZIP is not None:
+            return _PKG_ZIP
+        import atexit
+        import shutil
+        import tempfile
+        import zipfile
+
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        tmp_dir = tempfile.mkdtemp(prefix="fotmob_pkg_")
+        atexit.register(shutil.rmtree, tmp_dir, ignore_errors=True)
+        zip_path = os.path.join(tmp_dir, "fotmobdatapipeline_spark.zip")
+        with zipfile.ZipFile(zip_path, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        rel = os.path.join(
+                            "fotmobdatapipeline_spark", os.path.relpath(full, pkg_dir)
+                        )
+                        zf.write(full, rel)
+        _PKG_ZIP = zip_path
+        return zip_path
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable on Python workers regardless of the
-    driver's cwd/sys.path: zip it and addPyFile it.  Required for any
+    driver's cwd/sys.path: addPyFile a zip of it.  Required for any
     operator that crosses into Python workers (mapInPandas,
     applyInPandasWithState) — cloudpickle serializes module-level
     functions by reference, so workers must be able to import us.
-    Idempotent per session."""
-    import os
-    import tempfile
-    import zipfile
-
+    Idempotent per session; the zip is built once per process and
+    shared by every session (see :func:`_package_zip`)."""
     sc = spark.sparkContext
     if getattr(sc, "_fotmob_pkg_shipped", False):
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.mkdtemp(prefix="fotmob_pkg_"), "fotmobdatapipeline_spark.zip"
-    )
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join(
-                        "fotmobdatapipeline_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    sc.addPyFile(zip_path)
+    sc.addPyFile(_package_zip())
     sc._fotmob_pkg_shipped = True
 
 

@@ -105,13 +105,29 @@ def write_star(tables: dict[str, DataFrame], base_path: str, mode: str = "overwr
     engine's whole 'load stage'.  Writes run as CONCURRENT Spark jobs
     (thread pool): the tables are independent, the scheduler interleaves
     their tasks, and per-job fixed overhead stops being serialized —
-    same pattern a production loader uses for independent sinks."""
+    same pattern a production loader uses for independent sinks.  Each
+    pool thread inherits the caller's local properties (job group,
+    description, scheduler pool) and tags, so every write job is
+    attributed to the caller.
+
+    Tables from :func:`fotmobdatapipeline_spark.fotmob.run_pipeline`
+    share their parsed shots and their dims through lazy checkpoints:
+    the writes read the shared frames' checkpoint blocks (the first
+    write to reach a dim runs its key assignment), so the landing zone
+    is parsed once and each dim is built once for all seven writes."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     paths = {name: f"{base_path}/{name}" for name in tables}
     with ThreadPoolExecutor(max_workers=min(4, len(tables) or 1)) as pool:
         futures = [
-            pool.submit(write_parquet, df, paths[name], mode)
+            pool.submit(
+                inheritable_thread_target(df.sparkSession)(write_parquet),
+                df,
+                paths[name],
+                mode,
+            )
             for name, df in tables.items()
         ]
         for f in futures:

@@ -16,6 +16,9 @@ from __future__ import annotations
 
 import json
 import random
+import time
+from contextlib import contextmanager
+from pathlib import Path
 
 import pytest
 
@@ -88,15 +91,23 @@ def _make_matches() -> list[dict]:
     return matches
 
 
+def _write_zone(path, matches) -> str:
+    with open(path, "w") as f:
+        for m in matches:
+            f.write(json.dumps(m) + "\n")
+    return str(path)
+
+
 @pytest.fixture(scope="module")
-def star(spark, tmp_path_factory):
+def zone(tmp_path_factory):
+    return _write_zone(tmp_path_factory.mktemp("fotmob") / "matches.jsonl", _make_matches())
+
+
+@pytest.fixture(scope="module")
+def star(spark, zone):
     from fotmobdatapipeline_spark.fotmob import run_pipeline
 
-    path = tmp_path_factory.mktemp("fotmob") / "matches.jsonl"
-    with open(path, "w") as f:
-        for m in _make_matches():
-            f.write(json.dumps(m) + "\n")
-    tables = run_pipeline(spark, str(path))
+    tables = run_pipeline(spark, zone)
     return {k: v.cache() for k, v in tables.items()}
 
 
@@ -186,6 +197,169 @@ def test_leaderboard_sga(star):
             assert abs(r["sga"] - (r["total_xgot"] - r["total_xg"])) < 1e-12
 
 
+STAR_TABLES = (
+    "match_dim",
+    "team_dim",
+    "player_dim",
+    "shot_type_dim",
+    "event_type_dim",
+    "fact_table",
+    "looker_data",
+)
+
+
+def _n_shots(matches: list[dict]) -> int:
+    return sum(len(m["content"]["shotmap"]["shots"]) for m in matches)
+
+
+def _expected_dims(matches: list[dict]) -> dict[str, set]:
+    """The natural keys of every dim, computed in plain Python (P2
+    canonicalization applied to both team columns)."""
+    canon = {"Tottenham": "Tottenham Hotspur"}
+    shots = [s for m in matches for s in m["content"]["shotmap"]["shots"]]
+    teams = {
+        (m["general"][side]["id"], canon.get(n := m["general"][side]["name"], n))
+        for m in matches
+        for side in ("homeTeam", "awayTeam")
+    }
+    return {
+        "match_dim": {(m["matchId"],) for m in matches},
+        "team_dim": teams,
+        "player_dim": {(s["playerName"],) for s in shots},
+        "shot_type_dim": {(s["shotType"],) for s in shots},
+        "event_type_dim": {(s["eventType"], s["situation"]) for s in shots},
+    }
+
+
+DIM_COLUMNS = {
+    "match_dim": ("match_id", ["matchId"]),
+    "team_dim": ("team_id", ["teamId", "team_name"]),
+    "player_dim": ("player_id", ["player_name"]),
+    "shot_type_dim": ("shot_type_id", ["shot_type"]),
+    "event_type_dim": ("event_type_id", ["event_type", "situation"]),
+}
+
+
+def _json_scans(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("FileScan json")
+
+
+def test_star_tables_never_rescan_the_landing_zone(spark, zone):
+    """The zone is parsed once per run_pipeline call: all seven tables
+    read the shared parsed shots and the shared dims, so no table's plan
+    scans the JSON itself (the unshared lineage held 26 scans)."""
+    from fotmobdatapipeline_spark.fotmob import read_matches, run_pipeline
+
+    assert _json_scans(read_matches(spark, zone)) == 1  # the probe sees scans
+    tables = run_pipeline(spark, zone)
+    assert sorted(tables) == sorted(STAR_TABLES)
+    scans = {name: _json_scans(df) for name, df in tables.items()}
+    assert scans == dict.fromkeys(STAR_TABLES, 0)
+
+
+def test_rerun_over_a_regenerated_zone_reads_the_new_rows(spark, tmp_path):
+    """A second call over the same path, after the zone was rewritten
+    with different content, must return the new rows — the first
+    call's materialized shares are never reused."""
+    from fotmobdatapipeline_spark.fotmob import run_pipeline
+
+    path = tmp_path / "matches.jsonl"
+    first_matches = _make_matches()[:8]
+    first = run_pipeline(spark, _write_zone(path, first_matches))
+    assert first["looker_data"].count() == _n_shots(first_matches)  # materializes every share
+    assert first["player_dim"].count() == len(_expected_dims(first_matches)["player_dim"])
+
+    second_matches = _make_matches()[8:]
+    for m in second_matches:
+        for shot in m["content"]["shotmap"]["shots"]:
+            shot["playerName"] = "Renamed " + shot["playerName"]
+    second = run_pipeline(spark, _write_zone(path, second_matches))
+    expected = _expected_dims(second_matches)
+    assert second["fact_table"].count() == _n_shots(second_matches)
+    assert second["looker_data"].count() == _n_shots(second_matches)
+    for name, (_key, cols) in DIM_COLUMNS.items():
+        got = {tuple(r) for r in second[name].select(*cols).collect()}
+        assert got == expected[name], name
+    assert {(r["player_name"],) for r in second["looker_data"].collect()} == expected["player_dim"]
+
+
+def _read_star(spark, paths: dict[str, str]) -> dict[str, list]:
+    return {
+        name: sorted(
+            (tuple(r) for r in spark.read.parquet(path).collect()),
+            key=lambda t: tuple(str(v) for v in t),
+        )
+        for name, path in paths.items()
+    }
+
+
+def test_write_star_round_trips_the_fixture(spark, zone, tmp_path):
+    """write_star(run_pipeline(...)) lands every table with the fixture's
+    counts and keys, and a rerun over the same directory converges to
+    the same rows (overwrite is idempotent)."""
+    from fotmobdatapipeline_spark.fotmob import run_pipeline
+    from fotmobdatapipeline_spark.sources.sinks import write_star
+
+    base = str(tmp_path / "star")
+    paths = write_star(run_pipeline(spark, zone), base)
+    assert paths == {name: f"{base}/{name}" for name in STAR_TABLES}
+    matches = _make_matches()
+    expected = _expected_dims(matches)
+
+    back = {name: spark.read.parquet(path) for name, path in paths.items()}
+    fact = back["fact_table"].collect()
+    assert len(fact) == _n_shots(matches)
+    assert back["looker_data"].count() == _n_shots(matches)
+    assert sorted(r["shot_id"] for r in fact) == sorted(
+        s["id"] for m in matches for s in m["content"]["shotmap"]["shots"]
+    )
+    for name, (key, cols) in DIM_COLUMNS.items():
+        rows = back[name].select(key, *cols).collect()
+        assert {tuple(r)[1:] for r in rows} == expected[name], name
+        keys = sorted(r[key] for r in rows)
+        assert keys == list(range(len(expected[name]))), f"{name}: keys not dense"
+        assert {r[key] for r in fact} <= set(keys), f"fact has a {key} missing from {name}"
+
+    first = _read_star(spark, paths)
+    assert write_star(run_pipeline(spark, zone), base) == paths
+    assert _read_star(spark, paths) == first
+
+
+@contextmanager
+def _job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_write_star_jobs_join_the_callers_job_group(spark, zone, tmp_path):
+    """Every job write_star runs — on its pool threads — carries the
+    caller's job group, so a caller can attribute (and cancel) them."""
+    from fotmobdatapipeline_spark.fotmob import run_pipeline
+    from fotmobdatapipeline_spark.sources.sinks import write_star
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "fotmob-write-star-test"
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    with _job_group(sc, group):
+        write_star(run_pipeline(spark, zone), str(tmp_path / "star"))
+    # The status store is fed asynchronously, in job order: once a later
+    # sentinel job shows up, every write_star job has been recorded.
+    with _job_group(sc, group + "-sentinel"):
+        spark.range(1).count()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(group + "-sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never recorded"
+        time.sleep(0.1)
+    grouped = tracker.getJobIdsForGroup(group)
+    assert len(grouped) >= len(STAR_TABLES)  # at least one job per write
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
 def test_importing_plans_has_no_filesystem_side_effect(tmp_path):
     """Importing the plan modules must NOT generate the JSONL landing
     zone (regression pin: the ingest oracle used to run its generator at
@@ -214,6 +388,6 @@ print("OK")
         [sys.executable, "-c", probe],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parent.parent,
     )
     assert out.returncode == 0 and "OK" in out.stdout, out.stderr[-2000:]

@@ -172,3 +172,96 @@ def test_driver_contract_prefix_is_reference_surface():
     assert never[: len(prio)] == prio, (
         "_PRIORITY_ATTEST never-attested entries must lead the band"
     )
+
+
+def _thread_pools_and_targets(func: ast.AST):
+    """Yield ``(lineno, target)`` for every ``submit``/``map`` call on a
+    ``ThreadPoolExecutor`` that ``func`` binds (``with ... as pool`` or
+    ``pool = ThreadPoolExecutor(...)``), plus the local assignments that
+    a bare-name target may refer to."""
+
+    def is_pool_ctor(node) -> bool:
+        f = node.func if isinstance(node, ast.Call) else None
+        name = getattr(f, "id", None) or getattr(f, "attr", None)
+        return name == "ThreadPoolExecutor"
+
+    pools: set[str] = set()
+    assigned: dict[str, ast.AST] = {}
+    for node in ast.walk(func):
+        if isinstance(node, ast.withitem) and is_pool_ctor(node.context_expr):
+            if isinstance(node.optional_vars, ast.Name):
+                pools.add(node.optional_vars.id)
+        elif isinstance(node, ast.Assign):
+            for t in node.targets:
+                if isinstance(t, ast.Name):
+                    if is_pool_ctor(node.value):
+                        pools.add(t.id)
+                    assigned[t.id] = node.value
+    for node in ast.walk(func):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("submit", "map")
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id in pools
+            and node.args
+        ):
+            yield node.lineno, node.args[0], assigned
+
+
+def _wraps_inheritable(target: ast.AST, assigned: dict[str, ast.AST]) -> bool:
+    """True when ``target`` is (or names a local bound to) a call of
+    ``inheritable_thread_target``, in either form: ``itt(f)`` or
+    ``itt(session)(f)``."""
+    if isinstance(target, ast.Name) and target.id in assigned:
+        target = assigned[target.id]
+    for node in ast.walk(target):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name == "inheritable_thread_target":
+                return True
+    return False
+
+
+def test_thread_pool_targets_inherit_job_properties():
+    """A Spark job run from a plain ``ThreadPoolExecutor`` thread loses
+    the caller's job group, description and tags: ``write_star`` once
+    ran all 52 of its jobs outside the caller's ``setJobGroup``.  Every
+    package function that submits to a thread pool must wrap the target
+    in ``pyspark.inheritable_thread_target``."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(py.read_text(), filename=str(py))
+        for func in ast.walk(tree):
+            if not isinstance(func, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for lineno, target, assigned in _thread_pools_and_targets(func):
+                if not _wraps_inheritable(target, assigned):
+                    offenders.append(
+                        f"{py.relative_to(PKG.parent)}:{lineno} ({func.name}) submits "
+                        f"{ast.unparse(target)!r} without inheritable_thread_target"
+                    )
+    assert not offenders, "\n".join(sorted(set(offenders)))
+
+
+def test_thread_pool_lint_catches_an_unwrapped_target():
+    """The rule above must flag the pattern it exists for and pass both
+    wrapped forms."""
+    bad = ast.parse(
+        "def f(tables):\n"
+        "    with ThreadPoolExecutor(4) as pool:\n"
+        "        pool.submit(write_parquet, df, path)\n"
+    )
+    good = ast.parse(
+        "def f(spark):\n"
+        "    write = inheritable_thread_target(spark)(write_parquet)\n"
+        "    pool = ThreadPoolExecutor(4)\n"
+        "    pool.submit(write, df, path)\n"
+        "    pool.map(inheritable_thread_target(g), xs)\n"
+    )
+    (_, target, assigned), = list(_thread_pools_and_targets(bad.body[0]))
+    assert not _wraps_inheritable(target, assigned)
+    found = list(_thread_pools_and_targets(good.body[0]))
+    assert len(found) == 2
+    assert all(_wraps_inheritable(t, a) for _, t, a in found)
