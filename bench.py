@@ -333,7 +333,7 @@ def main() -> int:
     if os.environ.get("SPARK_GRAFT_BENCH_INNER") != "1":
         return _wrapper_main()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
 
     quiet_gate = _await_quiet_box()

@@ -25,6 +25,7 @@ from pyspark.sql.types import (
 )
 
 from fotmobdatapipeline_spark.functions.cleaning import canonicalize_values, rename_columns
+from fotmobdatapipeline_spark.lineage import share
 from fotmobdatapipeline_spark.operators.star import build_dim, build_fact, denormalize
 
 # Schema of one FotMob matchDetails payload as consumed by the reference
@@ -283,7 +284,7 @@ def build_team_dim(clean: DataFrame) -> DataFrame:
 def build_star(clean: DataFrame) -> dict[str, DataFrame]:
     """D1-D6 + J1 + P3 (dag:124-153): five dims + the fact table.
 
-    Each dim is built once: it is a lazy local checkpoint, so its own
+    Each dim is built once: it is shared (``lineage.share``), so its own
     write, its fact lookup and its ``looker_data`` lookup all read the
     same materialized rows instead of each re-running the distinct and
     the dense-key sort.  Under AQE, checkpointing a dim runs its shuffle
@@ -292,7 +293,7 @@ def build_star(clean: DataFrame) -> dict[str, DataFrame]:
     fact is not checkpointed: the ``team_lookup`` guard below still
     raises when the fact executes."""
     match_dim, team_dim, player_dim, shot_type_dim, event_type_dim = (
-        dim.localCheckpoint(eager=False)
+        share(dim)
         for dim in (
             build_dim(clean, ["matchId"], "match_id"),
             build_team_dim(clean),
@@ -389,18 +390,17 @@ def run_pipeline(spark, matches_path: str) -> dict[str, DataFrame]:
     tables from the result (dag:95-183).  Callers write each returned
     table (parquet/Delta) to realize the load stage.
 
-    The parsed, cleaned shots are a lazy local checkpoint: there is no
-    shuffle below it, so creating it runs nothing, and its first consumer
-    parses the landing zone once for all seven tables.  The five dims are
-    shared the same way (:func:`build_star`).  Under AQE, checkpointing a
-    dim runs the dim's shuffle stages, so that first consumer is this
-    call: it parses the zone and runs those stages, and the table writes
-    read checkpoint blocks.  Every call makes fresh checkpoints, freed
-    when their frames are garbage-collected, so a call over a
-    regenerated zone reads the new files, never an earlier call's rows."""
-    clean = clean_shots(flatten_shots(read_matches(spark, matches_path))).localCheckpoint(
-        eager=False
-    )
+    The parsed, cleaned shots are shared (``lineage.share``, lazy with no
+    checkpoint directory): there is no shuffle below it, so creating it
+    runs nothing, and its first consumer parses the landing zone once for
+    all seven tables.  The five dims are shared the same way
+    (:func:`build_star`).  Under AQE, checkpointing a dim runs the dim's
+    shuffle stages, so that first consumer is this call: it parses the
+    zone and runs those stages, and the table writes read checkpoint
+    blocks.  Every call makes fresh checkpoints, freed when their frames
+    are garbage-collected, so a call over a regenerated zone reads the
+    new files, never an earlier call's rows."""
+    clean = share(clean_shots(flatten_shots(read_matches(spark, matches_path))))
     star = build_star(clean)
     star["looker_data"] = build_looker_data(star)
     return star

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
+
 MSPRT_TAU2 = 0.01
 MSPRT_LN20 = 2.9957322735539909  # ln(1/0.05)
 
@@ -60,7 +62,7 @@ def msprt_report(hourly: DataFrame) -> DataFrame:
     the broadcast calendar-bounded hour list — never a partition-less
     window), then the mixture-SPRT log likelihood ratio per hour in one
     fixed IEEE tree, rounded to 9 dp (ln portability)."""
-    h = hourly.localCheckpoint(eager=False)  # two consumers: rows + steps
+    h = share(hourly)  # two consumers: rows + steps
     steps = h.agg(
         F.array_sort(F.collect_list(F.struct("hour", "na", "xa", "nb", "xb"))).alias(
             "steps"

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fotmobdatapipeline_spark.functions.hof import bind_once
+from fotmobdatapipeline_spark.lineage import share, truncate
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
@@ -180,7 +181,7 @@ def lsh_band_pairs(
         # (the common case) and falls back to a shuffled anti join on
         # a pathological corpus; joining the complementary COOL set
         # instead would shuffle a band-cardinality table.
-        exploded = exploded.localCheckpoint(eager=False)
+        exploded = share(exploded)
         hot = (
             exploded.groupBy("band_id", "band_key")
             .agg(F.count("*").alias("bdf"))
@@ -287,7 +288,7 @@ def _shingle_pair_commons(
         # there (2 Reused nodes in its final adaptive plan), and
         # checkpointing it measured +40% (r14) — left alone.
         if shingles is None:
-            sh = sh.localCheckpoint(eager=False)
+            sh = share(sh)
         sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
         postings = (
             sh.groupBy("s")
@@ -473,7 +474,7 @@ def winnowing_copy_pairs(
     lifted into a longer doc) that symmetric Jaccard dilutes away.
 
     Scale shape mirrors the prefix join: the fingerprint table is
-    computed once (localCheckpoint — its mapInPandas pipeline must not
+    computed once (share — its mapInPandas pipeline must not
     run once per consumer), per-fingerprint df comes from a map-side-
     combinable ``groupBy('fp').count()`` (a windowed count over
     ``partitionBy(fp)`` would shuffle+sort a boilerplate fingerprint's
@@ -490,17 +491,12 @@ def winnowing_copy_pairs(
 
     Output: (doc_a, doc_b, shared_fp, containment), containment >= tau.
     """
-    fps = winnowing_fingerprints(df, text_col, id_col, k, window).localCheckpoint(
-        eager=False
-    )
+    fps = share(winnowing_fingerprints(df, text_col, id_col, k, window))
     sizes = fps.groupBy(id_col).agg(F.count("*").alias("n_fp"))
-    rare = (
-        _df_capped_fps(fps, max_df)
-        # Both sides of the self-join below reference this subtree; a
-        # plain DataFrame would re-run the df-cap join per side —
-        # checkpoint so the pair join reads one materialization.
-        .localCheckpoint(eager=False)
-    )
+    # Both sides of the self-join below reference this subtree; a plain
+    # DataFrame would re-run the df-cap join per side — share it so the
+    # pair join reads one materialization.
+    rare = share(_df_capped_fps(fps, max_df))
     a = rare.select(F.col(id_col).alias("doc_a"), "fp")
     b = rare.select(F.col(id_col).alias("doc_b"), "fp")
     shared = (
@@ -571,7 +567,7 @@ def sentence_dedup(
     per-doc rebuild aggregate.  The exploded (doc, seg_idx, sentence)
     frame feeds THREE consumers (first-occurrence agg, winner join,
     per-doc sentence counts) — at 100 TB the corpus scan+explode is the
-    dominant cost, so it is localCheckpoint'ed and materialized exactly
+    dominant cost, so it is shared and materialized exactly
     once; ``n_sentences`` is derived from it as ``max(seg_idx) + 1``
     (posexplode indexes 0..n-1) instead of re-scanning the raw table.
     Three shuffles total, all combinable or skew-safe, ONE corpus scan
@@ -585,7 +581,7 @@ def sentence_dedup(
         F.posexplode(sentence_segments(text_col, words_per_sentence)).alias(
             "seg_idx", "sentence"
         ),
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     first = exploded.groupBy("sentence").agg(
         F.min(F.struct(id_col, "seg_idx")).alias("first_at")
     )
@@ -642,7 +638,7 @@ def intradoc_sentence_dedup(
         F.posexplode(sentence_segments(text_col, words_per_sentence)).alias(
             "seg_idx", "sentence"
         ),
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     first = exploded.groupBy(id_col, "sentence").agg(
         F.min("seg_idx").alias("seg_idx")
     )
@@ -707,7 +703,7 @@ def sentence_neardup(
             ),
         )
         .withColumn("sig", sig)
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     signable = signed.filter(F.col("sig") != "")
     first = signable.groupBy("sig").agg(
@@ -759,7 +755,7 @@ def connected_dup_clusters(
     so that's unbounded; the jumping step halves every chain per round,
     giving O(log n) convergence (the same doubling trick as
     large-star/small-star in the Google connected-components paper).
-    Each round is two joins + an aggregate; ``localCheckpoint`` truncates
+    Each round is two joins + an aggregate; ``truncate`` cuts
     the lineage so the plan doesn't grow with iterations — standard
     Spark iterative-algo hygiene.
 
@@ -771,7 +767,7 @@ def connected_dup_clusters(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .localCheckpoint()
+        .transform(truncate)
     )
     labels = edges.groupBy("src").agg(
         F.least(F.min("dst"), F.first("src")).alias("label")
@@ -800,7 +796,7 @@ def connected_dup_clusters(
             "v",
             F.col("label").alias("old"),
             F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-        ).localCheckpoint(eager=False)
+        ).transform(share)
         # Pointer jumping: follow my label to ITS label (labels are vertex
         # ids, so every label resolves) — halves chain lengths per round.
         x, y = propagated.alias("x"), propagated.alias("y")
@@ -811,7 +807,7 @@ def connected_dup_clusters(
                 F.col("x.old").alias("old"),
                 F.least(F.col("x.label"), F.col("y.label")).alias("label"),
             )
-            .localCheckpoint()
+            .transform(truncate)
         )
         changed = (
             new_labels.filter(F.col("label") != F.col("old")).limit(1).count()
@@ -962,7 +958,7 @@ def verified_lsh_dups(
     cands = lsh_band_pairs(
         sigs, id_col, num_hashes=num_hashes, rows_per_band=rows_per_band,
         max_band_df=max_band_df,
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     in_play = (
         cands.select(F.col("doc_a").alias(id_col))
         .unionByName(cands.select(F.col("doc_b").alias(id_col)))
@@ -971,7 +967,7 @@ def verified_lsh_dups(
     sets = (
         df.join(in_play, id_col, "left_semi")
         .select(F.col(id_col), word_shingles(F.col(text_col)).alias("sh"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     return (
         cands.join(
@@ -1150,7 +1146,7 @@ def incremental_dedup_flags(
     # no text — and batch-sized.
     bfp = batch.select(
         F.col(id_col), fingerprint(F.col(text_col)).alias("fp")
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     first_in_batch = bfp.groupBy("fp").agg(F.min(id_col).alias("__first_id"))
     hits = corpus_fps.withColumn("__in_corpus", F.lit(True))
     return (
@@ -1188,7 +1184,9 @@ def contamination_matrix(
     aggregates.  The corpus is never shuffled whole.
 
     Output: (group, n_docs, n_contaminated, total_shared, max_shared)
-    where *_shared count distinct shared shingles per doc.
+    where *_shared count distinct shared shingles per doc.  ``id_col``
+    must be unique in ``train``: shared shingles are counted per id, so
+    docs sharing an id would each be credited with all of them.
     """
     ev = (
         eval_shingles.select("s")
@@ -1406,7 +1404,7 @@ def prefix_filter_pairs(
     # broadcast subtrees below — without the checkpoint each
     # broadcast re-executes the pipeline (same pattern as
     # connected_dup_clusters' iteration base).
-    cand = cand.localCheckpoint(eager=False)
+    cand = share(cand)
     # Verify: shingle arrays are expensive (the dominant per-row cost),
     # so re-shingle ONLY candidate docs — the id join sits on the raw
     # table BELOW the shingle projection, so the corpus is scanned but
@@ -1512,7 +1510,7 @@ def _passage_base(
         F.posexplode_outer(_gram_hash_arr(text_col, gram_len)).alias(
             "pos", "ghash"
         ),
-    ).localCheckpoint(eager=False)
+    ).transform(share)
 
 
 def _passage_stats(
@@ -1669,9 +1667,7 @@ def simhash_pairs(
     Output: (doc_a, doc_b, hamming), hamming <= ``max_hamming``.
     """
     w = n_bits // n_bands
-    sigs = simhash_signatures(df, text_col, id_col, n_bits).localCheckpoint(
-        eager=False
-    )
+    sigs = share(simhash_signatures(df, text_col, id_col, n_bits))
     band_arr = F.array(
         *[F.substring("simhash", b * w + 1, w) for b in range(n_bands)]
     )

@@ -17,7 +17,7 @@ Scale notes:
 * Each round is one join (edges x ranks, both partitioned on src) and
   one aggregation (contributions by dst) — the same bounded shuffle
   pair every round; AQE handles skewed hub nodes.
-* ``localCheckpoint`` truncates lineage each round: without it the plan
+* A checkpoint (``lineage``) cuts lineage each round: without it the plan
   doubles per iteration and the driver OOMs on plan serialization long
   before the data is the problem (same hygiene as
   connected_dup_clusters).
@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share, truncate
 from fotmobdatapipeline_spark.operators.exactmath import floor_div
 
 _ONE = "CAST(1 AS DECIMAL(38,18))"
@@ -51,11 +52,11 @@ def pagerank(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(truncate)
     )
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     # Edges pre-joined with out-degree once; every round reuses this.
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
+    ed = truncate(e.join(deg, "src"))
 
     ranks = nodes.withColumn("rank", F.expr(_ONE))
     for _ in range(iters):
@@ -82,7 +83,7 @@ def pagerank(
             # materialization happens inside the next round's job
             # instead of one dedicated job per round — ranks has a
             # single consumer per round, so nothing is recomputed.
-            .localCheckpoint(eager=False)
+            .transform(share)
         )
     return ranks
 
@@ -119,10 +120,10 @@ def weighted_pagerank(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(truncate)
     )
     out_w = e.groupBy("src").agg(F.sum("w").alias("w_out"))
-    ed = e.join(out_w, "src").localCheckpoint(eager=True)
+    ed = truncate(e.join(out_w, "src"))
 
     base = 15 * unit // 100  # 0.15 * unit, exact
 
@@ -155,7 +156,7 @@ def weighted_pagerank(
             )
             # LAZY checkpoint (r14): same single-consumer-per-round
             # argument as :func:`pagerank` above.
-            .localCheckpoint(eager=False)
+            .transform(share)
         )
     return ranks.select(
         "node",
@@ -187,7 +188,7 @@ def kcore(
     Scale notes: each round is one degree aggregate plus two semi-joins
     of the edge list against the keep set (all key-partitioned hash
     operations, no node ever sees more than its neighborhood), with
-    ``localCheckpoint`` lineage hygiene per round like pagerank above.
+    checkpoint (``lineage.truncate``) hygiene per round like pagerank above.
     """
     e = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -195,7 +196,7 @@ def kcore(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(truncate)
     )
     for _ in range(rounds):
         deg = e.groupBy("src").agg(F.count("*").alias("deg"))
@@ -203,7 +204,7 @@ def kcore(
         e = (
             e.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=True)
+            .transform(truncate)
         )
     final_deg = e.groupBy("src").agg(F.count("*").alias("core_deg"))
     return final_deg.filter(F.col("core_deg") >= k).select(
@@ -272,7 +273,7 @@ def min_label_propagation(
     Scale notes: each round is one (edges x labels) hash join on src
     plus a min-aggregate on dst, and one label-table self-join for the
     jump — all key-partitioned; no node ever sees more than its own
-    neighborhood, no collect, no window.  ``localCheckpoint`` per round
+    neighborhood, no collect, no window.  A checkpoint per round
     truncates the per-round lineage growth exactly like pagerank above.
 
     Output: (doc_id, component) for every node in >= 1 pair.
@@ -283,13 +284,13 @@ def min_label_propagation(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(truncate)
     )
     labels = (
         e.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        .transform(truncate)
     )
     for _ in range(rounds):
         neigh = (
@@ -310,7 +311,7 @@ def min_label_propagation(
             F.least(F.col("label"), F.coalesce(F.col("_nl"), F.col("label"))).alias(
                 "label"
             ),
-        ).localCheckpoint(eager=False)
+        ).transform(share)
         # Pointer jumping: follow my label to ITS label.  Labels are
         # node ids drawn from the label table's own node set, so the
         # inner self-join resolves every row.
@@ -321,6 +322,6 @@ def min_label_propagation(
                 F.col("a.node").alias("node"),
                 F.least(F.col("a.label"), F.col("b.label")).alias("label"),
             )
-            .localCheckpoint(eager=False)
+            .transform(share)
         )
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))

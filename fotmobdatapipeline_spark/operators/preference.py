@@ -29,7 +29,7 @@ Scale notes:
 * Each MM round is two hash joins (matrix x ratings on both endpoints),
   one aggregate, and a 1-row normalization scalar joined back — the
   same bounded shuffle pair every round (operators/graph.py::pagerank
-  shape).  ``localCheckpoint`` truncates lineage per round.
+  shape).  A checkpoint (``lineage``) cuts lineage per round.
 * Laplace smoothing (+1 virtual win each way per observed matchup)
   keeps every model's win total positive, so no denominator in the MM
   update can be zero and ratings stay strictly positive — the standard
@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share, truncate
 from fotmobdatapipeline_spark.operators.exactmath import floor_div as _floor_div
 
 UNIT = 10**12
@@ -201,10 +202,10 @@ def btl_ratings(matrix: DataFrame, iters: int = 6) -> DataFrame:
     ``matrix`` must be smoothed (wins >= 1 for every model; see
     pairwise_win_matrix) so sum_j t_ij and sum p' are never zero.
     """
-    m = matrix.localCheckpoint(eager=True)
+    m = truncate(matrix)
     totals = m.groupBy("model").agg(F.sum("wins").alias("w_tot"))
     n_models = totals.count()  # driver scalar: one int, by construction
-    models = totals.localCheckpoint(eager=True)
+    models = truncate(totals)
 
     dec = "decimal(38,0)"
     ratings = models.select("model", F.lit(UNIT).cast(dec).alias("p"))
@@ -254,7 +255,7 @@ def btl_ratings(matrix: DataFrame, iters: int = 6) -> DataFrame:
                     f"CAST(s AS {dec})",
                 ).alias("p"),
             )
-            .localCheckpoint(eager=False)
+            .transform(share)
         )
 
     return totals.join(ratings, "model").select(

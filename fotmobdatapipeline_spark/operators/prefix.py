@@ -21,10 +21,12 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
+
 # Logical-plan nodes whose recompute does real work (shuffles, fan-out,
 # scans of heavy expressions).  A plan made only of leaves +
 # Project/Filter-class row-local ops is cheap to evaluate twice and NOT
-# worth an extra persist (see the gate in grouped_running_sum).
+# worth an extra persist (see the gate in grouped_running_sums).
 _EXPENSIVE_NODE = re.compile(
     r"^(?:[:+\-\s]*)(Join|Aggregate|Window|Generate|Sort|Distinct|Union|"
     r"GlobalLimit|Expand|Deduplicate|RepartitionByExpression|Repartition)\b",
@@ -60,7 +62,6 @@ def running_sum(
     value_col: str,
     out_col: str = "running",
     n_parts: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Append ``out_col`` = sum of ``value_col`` over all rows up to and
     including this one in ``order_cols`` order (ties broken by the full
@@ -68,26 +69,9 @@ def running_sum(
 
     Plan: repartitionByRange(order) -> in-partition sort + running sum
     (window partitioned BY Spark partition id, so no single-partition
-    collapse) -> broadcast-join the exclusive per-partition offsets.
-
-    AVAILABILITY CAVEAT (ADVICE r5): correctness depends on a
-    checkpoint of the partitioned frame (see the comment below), and
-    ``localCheckpoint`` truncates lineage into NON-replicated
-    executor-local storage — on a real cluster an executor loss after
-    the checkpoint makes the job fail unrecoverably (fail-LOUD, never
-    silent corruption, but a retry restarts the query).  For long
-    cluster jobs pass ``reliable_checkpoint=True`` to use a reliable
-    ``DataFrame.checkpoint()`` into ``spark.sparkContext.setCheckpointDir``
-    storage (HDFS/object store) — survives executor loss at the cost of
-    one distributed write+read of the frame."""
+    collapse) -> broadcast-join the exclusive per-partition offsets."""
     return grouped_running_sum(
-        df,
-        [],
-        order_cols,
-        value_col,
-        out_col=out_col,
-        n_parts=n_parts,
-        reliable_checkpoint=reliable_checkpoint,
+        df, [], order_cols, value_col, out_col=out_col, n_parts=n_parts
     )
 
 
@@ -98,7 +82,6 @@ def grouped_running_sum(
     value_col: str,
     out_col: str = "running",
     n_parts: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Per-group running total in ``order_cols`` order WITHIN each
     ``group_cols`` group — the scale-correct form of
@@ -118,36 +101,8 @@ def grouped_running_sum(
     cardinality itself is data-scale, per-group row counts are small and
     a plain ``Window.partitionBy(group)`` is the right tool instead —
     this helper is for the opposite regime."""
-    if n_parts is None:
-        n_parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        n_parts = int(n_parts)
-    # repartitionByRange's boundary SAMPLING pass computes the full
-    # input lineage once, and the shuffle itself computes it AGAIN — a
-    # 2x recompute of everything upstream at any scale (for
-    # llm_prep_pipeline_v3 that was the whole blocklist+LM+dedup chain
-    # twice per run; measured -41% on the entry from this line, r14).
-    # Checkpoint the input lazily so both passes read one persisted RDD
-    # — but only when the input is actually expensive to recompute: for
-    # an already-checkpointed leaf (or leaf + cheap row-local ops) the
-    # extra persist measured ~10% SLOWER (agg_winsorized).
-    if _recompute_is_expensive(df):
-        # Honor the availability contract (ADVICE r14): the gated input
-        # checkpoint must not reintroduce executor-local blocks into the
-        # lineage when the caller opted into reliable checkpointing.
-        df = (
-            df.checkpoint(eager=False)
-            if reliable_checkpoint
-            else df.localCheckpoint(eager=False)
-        )
     return grouped_running_sums(
-        df,
-        group_cols,
-        order_cols,
-        [value_col],
-        out_cols=[out_col],
-        n_parts=n_parts,
-        reliable_checkpoint=reliable_checkpoint,
-        _input_gated=True,
+        df, group_cols, order_cols, [value_col], [out_col], n_parts=n_parts
     )
 
 
@@ -158,8 +113,6 @@ def grouped_running_sums(
     value_cols: list[str],
     out_cols: list[str],
     n_parts: int | None = None,
-    reliable_checkpoint: bool = False,
-    _input_gated: bool = False,
 ) -> DataFrame:
     """Per-group running totals of SEVERAL value columns in one pass —
     the same two-phase scan as :func:`grouped_running_sum`, paying the
@@ -171,12 +124,17 @@ def grouped_running_sums(
     if n_parts is None:
         n_parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         n_parts = int(n_parts)
-    if not _input_gated and _recompute_is_expensive(df):
-        df = (
-            df.checkpoint(eager=False)
-            if reliable_checkpoint
-            else df.localCheckpoint(eager=False)
-        )
+    # repartitionByRange's boundary SAMPLING pass computes the full
+    # input lineage once, and the shuffle itself computes it AGAIN — a
+    # 2x recompute of everything upstream at any scale (for
+    # llm_prep_pipeline_v3 that was the whole blocklist+LM+dedup chain
+    # twice per run; measured -41% on the entry from this line, r14).
+    # Share the input so both passes read one materialization — but
+    # only when the input is actually expensive to recompute: for an
+    # already-checkpointed leaf (or leaf + cheap row-local ops) the
+    # extra persist measured ~10% SLOWER (agg_winsorized).
+    if _recompute_is_expensive(df):
+        df = share(df)
     gcols = list(group_cols)
     order = [F.col(c) for c in gcols + list(order_cols)]
     parted = (
@@ -204,11 +162,7 @@ def grouped_running_sums(
         local = local.withColumn(
             f"_local_run_{oc}", F.sum(F.col(vc)).over(w_local)
         )
-    local = (
-        local.checkpoint(eager=False)
-        if reliable_checkpoint
-        else local.localCheckpoint(eager=False)
-    )
+    local = share(local)
 
     # Tiny: <= n_parts + n_groups - 1 rows (groups are range-contiguous);
     # each group's exclusive prefix over partition ids is the offset.

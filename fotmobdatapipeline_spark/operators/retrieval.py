@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
+
 
 def term_frequencies(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -63,7 +65,7 @@ def inverted_index_stats(
     being built, so its size IS the job's output scale, and every
     consumer reads the materialized form.
     """
-    tf = term_frequencies(docs, text_col, id_col).localCheckpoint(eager=False)
+    tf = share(term_frequencies(docs, text_col, id_col))
     stats = tf.groupBy("term").agg(
         F.count("*").alias("df"),
         F.sum("tf").alias("total_tf"),
@@ -125,7 +127,7 @@ def tfidf_cosine_pairs(
             F.explode(word_shingles(F.col(text_col), shingle_n)).alias("term"),
         )
         tf = occ.groupBy("term", id_col).agg(F.count("*").alias("tf"))
-    tf = tf.localCheckpoint(eager=False)
+    tf = share(tf)
     # Bounded driver scalar (one int), the kmeans-centroid pattern: N is
     # embedded in the idf literal; the checkpointed tf is reused.
     n_docs = tf.select(id_col).distinct().count()
@@ -140,7 +142,7 @@ def tfidf_cosine_pairs(
             F.col(id_col),
             (F.col("tf").cast("double") * idf).alias("w"),
         )
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     norm = F.sqrt(
         F.aggregate(
@@ -226,11 +228,11 @@ def bm25_topk(
     tf = (
         term_frequencies(docs, text_col, id_col)
         .filter(F.col("term").isin(list(query_terms)))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     doc_len = docs.select(
         F.col(id_col), F.size(F.split(F.col(text_col), " ")).alias("dl")
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     corpus = doc_len.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("total_len")
     )
@@ -304,11 +306,11 @@ def bm25_topk_wide(
     tf = (
         term_frequencies(docs, text_col, id_col)
         .filter(F.col("term").isin(list(query_terms)))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     doc_len = docs.select(
         F.col(id_col), F.size(F.split(F.col(text_col), " ")).alias("dl")
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     corpus = doc_len.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("total_len")
     )
@@ -375,7 +377,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    tf = term_frequencies(docs, text_col, id_col).localCheckpoint(eager=False)
+    tf = share(term_frequencies(docs, text_col, id_col))
     n_docs = tf.select(id_col).distinct().count()
     stats = tf.groupBy("term").agg(F.count("*").alias("df"))
     if max_df is not None:

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fotmobdatapipeline_spark.functions.hof import bind_once
+from fotmobdatapipeline_spark.lineage import share
 from fotmobdatapipeline_spark.operators.sketches import hex32
 
 DSIR_BUCKETS = 4096
@@ -139,14 +140,14 @@ def dsir_ratio_table(
         .select("doc_id", "__t", (h % buckets).cast("int").alias("bucket"))
         .groupBy("doc_id", "__t", "bucket")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     # B-row model table feeds BOTH the totals agg and the ratio join —
     # pin it so the per_doc scan+shuffle runs once, not twice
     models = per_doc.groupBy("bucket").agg(
         F.sum(F.when(F.col("__t"), F.col("cnt")).otherwise(F.lit(0))).alias("ct"),
         F.sum(F.when(~F.col("__t"), F.col("cnt")).otherwise(F.lit(0))).alias("cs"),
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     return per_doc, dsir_ratio_from_counts(models, buckets, alpha)
 
 
@@ -314,7 +315,7 @@ def bigram_lm_counts(
     pairs = grams.select(
         (hu % buckets).cast("int").alias("bu"),
         (hb % buckets).cast("int").alias("bb"),
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     uni = pairs.groupBy("bu").agg(F.count("*").alias("cu"))
     bi = pairs.groupBy("bb").agg(F.count("*").alias("cb"))
     return uni, bi
@@ -377,7 +378,7 @@ def bigram_lm_nll(
         per_doc.filter(F.col("__r"))
         .groupBy("bu", "bb")
         .agg(F.sum("cnt").alias("cj"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     uni = ref_joint.groupBy("bu").agg(F.sum("cj").alias("cu"))
     bi = ref_joint.groupBy("bb").agg(F.sum("cj").alias("cb"))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product in DOUBLE (bit-deterministic)."""
@@ -382,7 +384,7 @@ def semantic_dedup(
     """
     assigned = ivf_assign(
         vectors, centroids, id_col, vec_col, centroid_id_col
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     later = assigned.select(
         F.col("vid"), F.col("vec"), F.col("nrm"), "cell"
     )
@@ -767,7 +769,7 @@ def lsh_candidate_pairs(
         # self-join sides) — checkpoint so norms/buckets compute once.
         # Hot buckets leave via a hint-free ANTI join (tiny hot set →
         # AQE broadcast; see lsh_band_pairs for the shape rationale).
-        v = v.localCheckpoint(eager=False)
+        v = share(v)
         hot = (
             v.groupBy("bucket")
             .agg(F.count("*").alias("bdf"))
@@ -827,7 +829,7 @@ def rp_bucket_topk_pairs(
         # Checkpoint: the 8-dot projection feeds the df count plus both
         # self-join sides — materialize the slim (id, bucket) frame once.
         # Hot buckets leave via a hint-free ANTI join (AQE broadcast).
-        rp = rp.localCheckpoint(eager=False)
+        rp = share(rp)
         hot = (
             rp.groupBy("rp_bucket")
             .agg(F.count("*").alias("bdf"))
@@ -843,7 +845,7 @@ def rp_bucket_topk_pairs(
         .select("id_a", "id_b")
         # Pair-count sized, but feeds the candidate-id derivation AND the
         # verify join below — checkpoint so the bucket pipeline runs once.
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     cand_ids = (
         pairs.select(F.col("id_a").alias(id_col))
@@ -998,7 +1000,7 @@ def pq_train_codebooks(
     ).withColumn("nrm", l2_norm(F.col("sv")))
     if iterations > 1:
         # Re-read per iteration; materialize the explode once.
-        parts = parts.localCheckpoint(eager=False)
+        parts = share(parts)
     for _ in range(iterations):
         cdf = spark.createDataFrame(
             [(s, c, v) for (s, c), v in sorted(books.items())], schema
@@ -1395,9 +1397,7 @@ def ivfpq_topk(
     from pyspark.sql import Window
 
     sub_d = dim // m
-    ca = ivf_assign(candidates, centroids, id_col, vec_col).localCheckpoint(
-        eager=False
-    )
+    ca = share(ivf_assign(candidates, centroids, id_col, vec_col))
     enc = pq_encode(
         ca.select(F.col("vid").alias(id_col), F.col("vec").alias(vec_col)),
         codebooks,

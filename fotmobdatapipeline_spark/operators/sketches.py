@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
+
 CMS_DEPTH = 4
 CMS_WIDTH = 256
 
@@ -153,11 +155,9 @@ def kmv_join_overlap(
     Output (one row): n_sketch, kth_hash, n_both, est_union,
     est_intersect.
     """
-    ka = kmv_sketch(a, key_a, k, salt).localCheckpoint(eager=False)
-    kb = kmv_sketch(b, key_b, k, salt).localCheckpoint(eager=False)
-    comb = (
-        ka.unionByName(kb).distinct().orderBy("h").limit(k).localCheckpoint(eager=False)
-    )
+    ka = share(kmv_sketch(a, key_a, k, salt))
+    kb = share(kmv_sketch(b, key_b, k, salt))
+    comb = share(ka.unionByName(kb).distinct().orderBy("h").limit(k))
     n_both_df = (
         comb.join(ka, "h", "left_semi")
         .join(kb, "h", "left_semi")
@@ -569,11 +569,9 @@ def kmv_anotb(
 
     Output (one row): n_sketch, kth_hash, n_anotb, est_union,
     est_anotb."""
-    ka = kmv_sketch(a, key_a, k, salt).localCheckpoint(eager=False)
-    kb = kmv_sketch(b, key_b, k, salt).localCheckpoint(eager=False)
-    comb = (
-        ka.unionByName(kb).distinct().orderBy("h").limit(k).localCheckpoint(eager=False)
-    )
+    ka = share(kmv_sketch(a, key_a, k, salt))
+    kb = share(kmv_sketch(b, key_b, k, salt))
+    comb = share(ka.unionByName(kb).distinct().orderBy("h").limit(k))
     n_anotb_df = (
         comb.join(ka, "h", "left_semi")
         .join(kb, "h", "left_anti")

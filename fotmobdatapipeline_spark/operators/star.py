@@ -32,6 +32,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
+
 
 def build_dim(
     df: DataFrame,
@@ -60,7 +62,7 @@ def build_dim(
         dim = dim.select(F.xxhash64(*natural_keys).alias(key_col), *natural_keys)
         # The agg would re-run the distinct; checkpoint so the guard and
         # the returned frame share one materialization.
-        dim = dim.localCheckpoint(eager=False)
+        dim = share(dim)
         if verify:
             assert_unique_keys(dim, key_col)
         return dim

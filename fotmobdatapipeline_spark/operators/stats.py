@@ -39,6 +39,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
+
 
 def _distinct_value_runs(
     df: DataFrame,
@@ -97,9 +99,7 @@ def exact_group_quantiles(
     # repartitionByRange, whose boundary SAMPLING can differ between
     # evaluations — offsets would then describe a different partitioning
     # than the rows they select from.
-    local = dv.withColumn("_upto", F.sum("_cnt").over(w_local)).localCheckpoint(
-        eager=False
-    )
+    local = share(dv.withColumn("_upto", F.sum("_cnt").over(w_local)))
 
     # Tiny by range contiguity: <= n_parts + n_groups - 1 rows.  The
     # exclusive per-group prefix is each partition's rank offset; the

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
 from fotmobdatapipeline_spark.operators import joins as J
 from fotmobdatapipeline_spark.operators import sampling as SA
 from fotmobdatapipeline_spark.operators import similarity as S
@@ -594,7 +595,7 @@ def dq_fk_integrity(spark: SparkSession, sf_dir: str):
         )
         # One row, three union-branch consumers: checkpoint so the
         # lineitem aggregate runs once, not once per branch.
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
 
     def li_row(name, col):
@@ -2022,7 +2023,7 @@ def agg_winsorized(spark: SparkSession, sf_dir: str):
         li.select("l_returnflag", v.alias("v"))
         .groupBy("l_returnflag", "v")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)  # two consumers: prefix scan + final agg
+        .transform(share)  # two consumers: prefix scan + final agg
     )
     run = grouped_running_sum(cells, ["l_returnflag"], ["v"], "cnt", out_col="u")
     tn = cells.groupBy("l_returnflag").agg(F.sum("cnt").cast("bigint").alias("n"))
@@ -2281,7 +2282,7 @@ def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str):
         (F.sum("cnt").over(wcum) - F.col("cnt")).alias("cum_prev"),
         F.sum("cnt").over(wcum).alias("cum"),
         F.sum("cnt").over(Window.partitionBy("l_returnflag")).alias("n"),
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     parts = []
     for q in (0.5, 0.9):
         # Target rank (n-1)*q + 1: PERCENTILE_CONT's interpolation
@@ -2369,7 +2370,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str):
     cells = (
         li.groupBy("l_returnflag", F.col("l_extendedprice").alias("v"))
         .agg(F.sum(F.col("l_quantity").cast("bigint")).alias("w"))
-        .localCheckpoint(eager=False)  # two consumers: prefix scan + totals
+        .transform(share)  # two consumers: prefix scan + totals
     )
     run = grouped_running_sum(cells, ["l_returnflag"], ["v"], "w", out_col="cumw")
     tot = cells.groupBy("l_returnflag").agg(
@@ -2476,7 +2477,7 @@ def sim_ivf_recall_curve(spark: SparkSession, sf_dir: str):
     truth = (
         S.brute_force_topk(queries, emb, k=5)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)  # four consumers: counts + 3 hit joins
+        .transform(share)  # four consumers: counts + 3 hit joins
     )
     nt = truth.agg(
         F.count("*").cast("bigint").alias("n_truth"),
@@ -2714,7 +2715,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str):
         orders.filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_orderkey").alias("k"))
         .distinct()
-        .localCheckpoint(eager=False)  # two consumers: bloom build + exact join
+        .transform(share)  # two consumers: bloom build + exact join
     )
     bloom = bloom_filter_table(bk, "k", m_bits=_BJ_M, salt=_BJ_SALT)
     probed = bloom_prefilter(
@@ -2725,7 +2726,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str):
         salt=_BJ_SALT,
         out_col="pass",
     )
-    probed = probed.localCheckpoint(eager=False)  # counts + survivors join
+    probed = share(probed)  # counts + survivors join
     survivors = probed.filter(F.col("pass")).join(
         bk.withColumn("matched", F.lit(1)), "k", "left"
     )

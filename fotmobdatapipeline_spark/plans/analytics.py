@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
 from fotmobdatapipeline_spark.operators.cdc import incremental_group_sums, snapshot_diff
 from fotmobdatapipeline_spark.operators.profiling import null_profile, table_checksum
 from fotmobdatapipeline_spark.plans.catalog import register
@@ -500,7 +501,7 @@ def cdc_incremental_agg(spark: SparkSession, sf_dir: str):
     # lazy checkpoint = the old snapshot derived once — exactly how a
     # production consumer reads a materialized CDC snapshot (the r14
     # cdc_incremental_join_view treatment).  NEW has one consumer.
-    old = old.localCheckpoint(eager=False)
+    old = share(old)
     base = old.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"), F.sum("total").alias("s")
     )
@@ -635,7 +636,7 @@ def agg_time_weighted(spark: SparkSession, sf_dir: str):
         ["t", "o_orderkey"],
         "one",
         out_col="rk",
-    ).localCheckpoint(eager=False)  # both sides of the successor join
+    ).transform(share)  # both sides of the successor join
     nxt = ranked.select(
         "o_orderpriority",
         (F.col("rk") - 1).alias("rk"),
@@ -701,7 +702,7 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str):
         read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("part_a"))
     b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("part_b"))
@@ -809,10 +810,10 @@ def cdc_incremental_join_view(spark: SparkSession, sf_dir: str):
     # four materialized CDC snapshots read once; the lazy checkpoints
     # model exactly that (one derivation pass per snapshot, every
     # consumer reads the persisted frame).
-    fact_old = fact_old.localCheckpoint(eager=False)
-    fact_new = fact_new.localCheckpoint(eager=False)
-    dim_old = dim_old.localCheckpoint(eager=False)
-    dim_new = dim_new.localCheckpoint(eager=False)
+    fact_old = share(fact_old)
+    fact_new = share(fact_new)
+    dim_old = share(dim_old)
+    dim_new = share(dim_new)
 
     view_old = fact_old.join(dim_old, "ck")
     fact_diff = snapshot_diff(

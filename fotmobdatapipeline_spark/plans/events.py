@@ -18,6 +18,7 @@ import os
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share, truncate
 from fotmobdatapipeline_spark.operators.abtest import EVENT_TYPES
 from fotmobdatapipeline_spark.plans.catalog import register
 from fotmobdatapipeline_spark.sources.registry import read_table
@@ -815,7 +816,7 @@ def funnel_conversion(ev, steps=("view", "click", "purchase")):
         ev.filter(F.col("event_type") == s1)
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     c = (
         ev.filter(F.col("event_type") == s2)
@@ -823,7 +824,7 @@ def funnel_conversion(ev, steps=("view", "click", "purchase")):
         .filter(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     p = (
         ev.filter(F.col("event_type") == s3)
@@ -893,7 +894,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str):
             "user_id", F.date_trunc("day", "ts").cast("date").alias("d")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     first = act.groupBy("user_id").agg(F.min("d").alias("cohort_day"))
     ret = (
@@ -903,7 +904,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str):
             F.datediff(F.col("d"), F.col("cohort_day")).cast("int").alias("day_offset"),
         )
         .agg(F.count("*").alias("n_users"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     base = ret.filter(F.col("day_offset") == 0).select(
         "cohort_day", F.col("n_users").alias("cohort_size")
@@ -1057,7 +1058,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str):
             F.window("ts", "1 hour").start.cast("string").alias("window_start"),
         )
         .agg(F.count("*").alias("n_events"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
 
     def lower_median(df, val_col, out_col):
@@ -1074,7 +1075,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str):
     dev = (
         hrs.join(med, "event_type")
         .withColumn("adev", F.abs(F.col("n_events") - F.col("med")))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     mad = lower_median(dev, "adev", "mad")
     return dev.join(mad, "event_type").select(
@@ -1156,13 +1157,13 @@ def drift_event_type_shares(spark: SparkSession, sf_dir: str):
         read_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.count("*").alias("n_cur"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     base = (
         read_table(spark, _DRIFT_BASELINE_DIR, "events")
         .groupBy("event_type")
         .agg(F.count("*").alias("n_base"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     tc = cur.agg(F.sum("n_cur").alias("tc"))
     tb = base.agg(F.sum("n_base").alias("tb"))
@@ -1245,7 +1246,7 @@ def drift_value_ks(spark: SparkSession, sf_dir: str):
             F.coalesce("nc", F.lit(0)).alias("nc"),
             F.coalesce("nb", F.lit(0)).alias("nb"),
         )
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     # ONE two-phase scan for both cumulative columns (r14): the chained
     # single-column form paid the range shuffle + sort + offsets twice
@@ -2672,7 +2673,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str):
         F.sum("obs").cast("bigint").alias("d"),
         F.sum(1 - F.col("obs")).cast("bigint").alias("c"),
     )
-    t = t.localCheckpoint(eager=False)  # three consumers: rows, n0, steps
+    t = share(t)  # three consumers: rows, n0, steps
     n0 = t.agg(F.sum(F.col("d") + F.col("c")).cast("bigint").alias("n0"))
     steps = t.agg(
         F.array_sort(F.collect_list(F.struct("dur", "d", "c"))).alias("steps")
@@ -2845,7 +2846,7 @@ def events_theilsen_trend(spark: SparkSession, sf_dir: str):
         .groupBy("event_type", "day")
         .agg((F.sum(F.col("v") * 100)).cast("bigint").alias("cents"))
     )
-    daily = daily.localCheckpoint(eager=False)  # two consumers: pairs + n_days
+    daily = share(daily)  # two consumers: pairs + n_days
     a = daily.select("event_type", F.col("day").alias("da"), F.col("cents").alias("ca"))
     b = daily.select("event_type", F.col("day").alias("db"), F.col("cents").alias("cb"))
     pairs = (
@@ -2959,7 +2960,7 @@ def events_hte_by_activity(spark: SparkSession, sf_dir: str):
         F.sum(F.when(is_a, F.col("rev")).otherwise(dec0)).alias("s_a"),
         F.sum(F.when(is_b, F.col("rev")).otherwise(dec0)).alias("s_b"),
     )
-    b = b.localCheckpoint(eager=False)  # two consumers: rows + pooled cells
+    b = share(b)  # two consumers: rows + pooled cells
     o = b.agg(
         (
             F.sum("s_a").cast("double") / F.sum("n_a").cast("double")
@@ -3120,7 +3121,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str):
         "week", F.expr(f"unix_micros(ts) div {_WEEK_US}")
     )
     u = ev.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    u = u.localCheckpoint(eager=False)  # two consumers: sizes + purchase join
+    u = share(u)  # two consumers: sizes + purchase join
     cs = u.groupBy("cohort_week").agg(F.count("*").cast("bigint").alias("cohort_size"))
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -3193,7 +3194,7 @@ def events_seasonal_residuals(spark: SparkSession, sf_dir: str):
     from fotmobdatapipeline_spark.operators.timeseries import hourly_cents
 
     ev = read_table(spark, sf_dir, "events")
-    hourly = hourly_cents(ev).localCheckpoint(eager=False)  # rows + baseline
+    hourly = share(hourly_cents(ev))  # rows + baseline
     base = (
         hourly.withColumn("hod", F.col("ho") % 24)
         .groupBy("event_type", "hod")
@@ -3316,7 +3317,7 @@ def drift_value_psi(spark: SparkSession, sf_dir: str):
             F.coalesce("nb", F.lit(0)).cast("bigint").alias("nb"),
         )
     )
-    m = m.localCheckpoint(eager=False)  # two consumers: rows + totals
+    m = share(m)  # two consumers: rows + totals
     tot = m.agg(
         F.sum("nc").cast("bigint").alias("nct"),
         F.sum("nb").cast("bigint").alias("nbt"),
@@ -3332,7 +3333,7 @@ def drift_value_psi(spark: SparkSession, sf_dir: str):
         pb.alias("pb"),
         F.round((pc - pb) * F.log(pc / pb), 9).alias("psi_term"),
     )
-    r = r.localCheckpoint(eager=False)  # two consumers: rows + fold
+    r = share(r)  # two consumers: rows + fold
     total = r.agg(
         F.aggregate(
             F.transform(
@@ -3509,7 +3510,7 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str):
     e = ev.select(
         "user_id", "event_type", F.row_number().over(w).alias("rn")
     )
-    e = e.localCheckpoint(eager=False)  # two consumers: pu + kept rows
+    e = share(e)  # two consumers: pu + kept rows
     pu = e.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "purchase", F.col("rn"))).alias("prn")
     )
@@ -4212,7 +4213,7 @@ def events_spearman_corr(spark: SparkSession, sf_dir: str):
     rev = ev.groupBy("user_id").agg(
         F.sum(F.col("value").cast(_DEC) * 100).cast("bigint").alias("s"),
         F.count("*").cast("bigint").alias("c"),
-    ).localCheckpoint(eager=False)  # three consumers: two rank scans + the join
+    ).transform(share)  # three consumers: two rank scans + the join
     # 2x-midrank of a tie run ending at inclusive prefix u with size cnt:
     # 2*(u - cnt) + cnt + 1 = 2u - cnt + 1 — always an integer.
     gs = rev.groupBy("s").agg(F.count("*").cast("bigint").alias("cnt"))
@@ -4349,7 +4350,7 @@ def events_bh_fdr(spark: SparkSession, sf_dir: str):
     # branches (one per event type); without a materialization each
     # branch re-runs the full events scan + aggregate (ReusedExchange
     # is best-effort, not a contract).  One row: free.
-    w = w.localCheckpoint(eager=False)
+    w = share(w)
     rows = []
     for i, t in enumerate(EVENT_TYPES):
         p0 = F.col(f"x_0_{i}").cast("double") / F.col("n_0").cast("double")
@@ -4452,7 +4453,7 @@ def events_acf_hourly(spark: SparkSession, sf_dir: str):
         )
         .groupBy("ho")
         .agg(F.sum("c").cast("bigint").alias("x"))
-        .localCheckpoint(eager=False)  # three consumers: stats, den, pairs
+        .transform(share)  # three consumers: stats, den, pairs
     )
     st = h.agg(
         F.count("*").cast("bigint").alias("n"), F.sum("x").cast("bigint").alias("s")
@@ -4550,7 +4551,7 @@ def events_changepoint_hourly(spark: SparkSession, sf_dir: str):
         .agg(F.sum("d").cast("bigint").alias("x"))
         .withColumn("x2", F.col("x") * F.col("x"))
         .withColumn("_one", F.lit(1))
-        .localCheckpoint(eager=False)  # two consumers: prefix chain + totals
+        .transform(share)  # two consumers: prefix chain + totals
     )
     # ONE two-phase scan for all three cumulative columns (r14): the
     # chained form paid the range shuffle + sort + checkpoint + offsets
@@ -4637,7 +4638,7 @@ def events_session_stats(spark: SparkSession, sf_dir: str):
             (F.max("tus") - F.min("tus")).cast("bigint").alias("dur_us"),
             F.max((F.col("event_type") == "purchase").cast("int")).alias("purchased"),
         )
-        .localCheckpoint(eager=False)  # two consumers: totals + quantiles
+        .transform(share)  # two consumers: totals + quantiles
     )
     t = sess.agg(
         F.count("*").cast("bigint").alias("n_sessions"),
@@ -4918,11 +4919,11 @@ def events_kendall_tau(spark: SparkSession, sf_dir: str):
     cells = (
         pu.groupBy("s", "c")
         .agg(F.count("*").cast("bigint").alias("m"))
-        .localCheckpoint(eager=True)  # consumers: marginals x2, n, rank join
+        .transform(truncate)  # consumers: marginals x2, n, rank join
     )
     # Tie marginals: w*(w-1) is always even, so integer halving is exact.
     ws = cells.groupBy("s").agg(F.sum("m").cast("bigint").alias("w"))
-    ws = ws.localCheckpoint(eager=True)  # consumers: n1, dense rank, R
+    ws = truncate(ws)  # consumers: n1, dense rank, R
     n1 = ws.agg(
         F.coalesce(F.sum(F.expr("w * (w - 1) div 2")), F.lit(0))
         .cast("bigint")
@@ -5078,7 +5079,7 @@ def events_ccf_hourly(spark: SparkSession, sf_dir: str):
             F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
             F.coalesce("y", F.lit(0)).cast("bigint").alias("y"),
         )
-        .localCheckpoint(eager=False)  # three consumers: stats, den, pairs
+        .transform(share)  # three consumers: stats, den, pairs
     )
     st = h.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -5315,7 +5316,7 @@ def events_mann_kendall(spark: SparkSession, sf_dir: str):
         )
         .groupBy("ho")
         .agg(F.sum("c").cast("bigint").alias("x"))
-        .localCheckpoint(eager=True)  # consumers: rank, stats pass, 1x kernel
+        .transform(truncate)  # consumers: rank, stats pass, 1x kernel
     )
     n_ranks = h.count()
     rk = running_sum(
@@ -5591,7 +5592,7 @@ def events_attribution_position(spark: SparkSession, sf_dir: str):
         .filter(F.col("rn") == 1)
         .select("user_id", F.col("tus").alias("ptus"), F.col("event_id").alias("peid"))
     )
-    fp = fp.localCheckpoint(eager=False)  # two consumers: touches join + direct
+    fp = share(fp)  # two consumers: touches join + direct
     touches = (
         ev.filter(F.col("event_type") != "purchase")
         .join(fp, "user_id")
@@ -5605,7 +5606,7 @@ def events_attribution_position(spark: SparkSession, sf_dir: str):
     t = touches.withColumn("rn", F.row_number().over(wp)).withColumn(
         "k", F.count("*").over(wk)
     )
-    t = t.localCheckpoint(eager=False)  # two consumers: cells + direct anti
+    t = share(t)  # two consumers: cells + direct anti
     g = t.groupBy("channel", F.col("k").cast("bigint").alias("k")).agg(
         F.sum((F.col("rn") == 1).cast("long")).cast("bigint").alias("f"),
         F.sum(((F.col("rn") == F.col("k")) & (F.col("k") > 1)).cast("long"))
@@ -5718,7 +5719,7 @@ def events_session_sweepline(spark: SparkSession, sf_dir: str):
         .groupBy("user_id", "session_id")
         .agg(F.min("tus").alias("s"), (F.max("tus") + 1).alias("e"))
     )
-    sess = sess.localCheckpoint(eager=False)  # two consumers: deltas + count
+    sess = share(sess)  # two consumers: deltas + count
     deltas = (
         sess.select(F.col("s").alias("t"), F.lit(1).alias("d"))
         .unionByName(sess.select(F.col("e").alias("t"), F.lit(-1).alias("d")))
@@ -5737,9 +5738,7 @@ def events_session_sweepline(spark: SparkSession, sf_dir: str):
     run = grouped_running_sums(
         deltas.withColumn("one", F.lit(1)), [], ["t"], ["one", "net"],
         ["rnk", "active"],
-    ).localCheckpoint(
-        eager=False
-    )  # three consumers: peak, argmin, covered join
+    ).transform(share)  # three consumers: peak, argmin, covered join
     nxt = run.select((F.col("rnk") - 1).alias("rnk"), F.col("t").alias("next_t"))
     seg = run.join(nxt, "rnk", "left")
     n_sessions = sess.agg(F.count("*").cast("bigint").alias("n_sessions"))
@@ -5831,7 +5830,7 @@ def events_top_paths(spark: SparkSession, sf_dir: str):
         .filter(F.col("rn") == 1)
         .select("user_id", F.col("tus").alias("ptus"), F.col("event_id").alias("peid"))
     )
-    fp = fp.localCheckpoint(eager=False)  # two consumers: touch join + direct
+    fp = share(fp)  # two consumers: touch join + direct
     t = (
         ev.filter(F.col("event_type") != "purchase")
         .join(fp, "user_id")
@@ -5859,7 +5858,7 @@ def events_top_paths(spark: SparkSession, sf_dir: str):
             ).alias("path")
         )
     )
-    paths = paths.localCheckpoint(eager=False)  # two consumers: union + anti
+    paths = share(paths)  # two consumers: union + anti
     direct = fp.join(paths.select("user_id"), "user_id", "left_anti").select(
         F.lit("direct").alias("path")
     )

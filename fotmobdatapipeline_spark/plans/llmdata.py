@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from fotmobdatapipeline_spark.functions import text as T
+from fotmobdatapipeline_spark.lineage import share, shared_frame, truncate
 from fotmobdatapipeline_spark.operators import dedup as D
 from fotmobdatapipeline_spark.operators import similarity as S
 from fotmobdatapipeline_spark.plans.catalog import register
@@ -138,80 +139,63 @@ _LSH_HASHES = 4
 _LSH_BAND_DF = 50
 _lsh_sigs = ",\n             ".join(_sql_sig(j) for j in range(_LSH_HASHES))
 
-# Shared-subtree memos (VERDICT r5 #4: "share the band-pair subtree
-# across the four CC entries"): seven entries consume the identical
-# sigs -> capped-band-pairs subtree, four of them additionally the
-# identical connected-components labels.  The memo holds a
-# localCheckpoint'ed DataFrame — EXECUTOR-resident, never a driver
-# collect (labels are corpus-sized; only the k-means/PQ trainer memo
-# collects, because trained models are k x d values) — keyed by the
-# live session, so within one process the subtree materializes once.
-# Entries whose OUTPUT is the shared frame (dedup_lsh_candidates)
+# Shared subtrees (VERDICT r5 #4: "share the band-pair subtree across
+# the four CC entries"): seven entries consume the identical sigs ->
+# capped-band-pairs subtree, four of them additionally the identical
+# connected-components labels.  Each is a lineage.shared_frame —
+# EXECUTOR-resident, never a driver collect (labels are corpus-sized;
+# only the k-means/PQ trainer memo collects, because trained models are
+# k x d values) — so within one application the subtree materializes
+# once.  Entries whose OUTPUT is the shared frame (dedup_lsh_candidates)
 # build it directly so their bench timing stays a cold measurement.
-_SUBTREE_MEMO: dict = {}
-
-
-def _session_key(spark: SparkSession) -> str:
-    """Stable session identity for memo keys (ADVICE r6: id(spark) can
-    be REUSED by CPython after a stopped session is collected, handing
-    a new session a checkpoint bound to dead executors).  applicationId
-    is unique per SparkContext; inserting under a new application also
-    EVICTS entries from prior applications — their localCheckpoints
-    died with their executors, so they are unusable and would otherwise
-    accumulate for the process lifetime."""
-    app = spark.sparkContext.applicationId
-    stale = [k for k in _SUBTREE_MEMO if k[0] != app]
-    for k in stale:
-        del _SUBTREE_MEMO[k]
-    return app
-
-
 def _shingles_shared(spark: SparkSession, sf_dir: str):
-    """ONE exploded (doc_id, shingle) frame per session, lazily
-    checkpointed (r15, VERDICT r14 #5): the minhash/LSH side and the
+    """ONE exploded (doc_id, shingle) frame per session, shared
+    (r15, VERDICT r14 #5): the minhash/LSH side and the
     recall report's exact-Jaccard truth tier shingle the SAME corpus
     with the same n, but their downstreams aggregate differently
     (groupBy doc vs groupBy shingle), so ReusedExchange can never cover
     the duplicated tokenize+explode — without this the corpus is
     tokenized once per consumer.  At 100 TB the persisted frame is the
-    guide-§8 fingerprint pass: ~3x corpus bytes of executor-local
-    blocks instead of a second full decode of the text column."""
-    key = (_session_key(spark), sf_dir, "shingles", 3)
-    if key not in _SUBTREE_MEMO:
+    guide-§8 fingerprint pass: ~3x corpus bytes of checkpoint blocks
+    instead of a second full decode of the text column."""
+
+    def build():
         from fotmobdatapipeline_spark.operators.dedup import word_shingles
 
         docs = read_table(spark, sf_dir, "documents")
-        _SUBTREE_MEMO[key] = docs.select(
+        return share(docs.select(
             F.col("doc_id"), F.explode(word_shingles(F.col("text"), 3)).alias("s")
-        ).localCheckpoint(eager=False)
-    return _SUBTREE_MEMO[key]
+        ))
+
+    return shared_frame(spark, (sf_dir, "shingles", 3), build)
 
 
 def _lsh_pairs_shared(spark: SparkSession, sf_dir: str):
-    key = (_session_key(spark), sf_dir, "lsh_pairs", _LSH_HASHES, _LSH_BAND_DF)
-    if key not in _SUBTREE_MEMO:
+    def build():
         sigs = D.minhash_signatures(
             read_table(spark, sf_dir, "documents"), num_hashes=_LSH_HASHES,
             shingles=_shingles_shared(spark, sf_dir),
         )
-        _SUBTREE_MEMO[key] = D.lsh_band_pairs(
+        return share(D.lsh_band_pairs(
             sigs, num_hashes=_LSH_HASHES, rows_per_band=1,
             max_band_df=_LSH_BAND_DF,
-        ).localCheckpoint(eager=False)
-    return _SUBTREE_MEMO[key]
+        ))
+
+    key = (sf_dir, "lsh_pairs", _LSH_HASHES, _LSH_BAND_DF)
+    return shared_frame(spark, key, build)
 
 
 def _dup_cluster_reps_shared(spark: SparkSession, sf_dir: str):
     from fotmobdatapipeline_spark.operators.dedup import connected_dup_clusters
 
-    key = (_session_key(spark), sf_dir, "cc_reps", _LSH_HASHES, _LSH_BAND_DF)
-    if key not in _SUBTREE_MEMO:
-        # connected_dup_clusters checkpoints per round internally; the
-        # returned labels frame is already lineage-truncated.
-        _SUBTREE_MEMO[key] = connected_dup_clusters(
-            _lsh_pairs_shared(spark, sf_dir)
-        )
-    return _SUBTREE_MEMO[key]
+    # connected_dup_clusters truncates per round internally; the
+    # returned labels frame is already lineage-truncated.
+    key = (sf_dir, "cc_reps", _LSH_HASHES, _LSH_BAND_DF)
+    return shared_frame(
+        spark, key, lambda: connected_dup_clusters(_lsh_pairs_shared(spark, sf_dir))
+    )
+
+
 _lsh_bands_raw = "\n        UNION ALL ".join(
     f"SELECT doc_id, {j} AS band_id, sig_{j} AS band_key FROM sig" for j in range(_LSH_HASHES)
 )
@@ -865,37 +849,31 @@ def _ivf_kmeans_oracle(k: int = 8, iters: int = 3, d: int = 64) -> str:
 # VALUE — k×d / m×codes×sub_d floats — not a computation worth repeating.
 # Five catalog entries train the same models (sim_ivf_kmeans_topk,
 # dedup_semantic_clusters, sim_pq_adc_topk, sim_ivfpq_topk, and all
-# three tiers nested inside sim_recall_report); the memo collects the
-# tiny trained frame once per process and replays it as a local
-# relation, cutting the parity suite's heaviest repeated subtree.
+# three tiers nested inside sim_recall_report); each is a
+# lineage.shared_frame that collects the tiny trained frame once per
+# application and replays it as a local relation, cutting the parity
+# suite's heaviest repeated subtree.
 # Value-transparent: cold or warm, every consumer sees bit-identical
 # centroids (the oracles replay the same fixed-point train).
-_TRAINED_MEMO: dict = {}
+def _trained(spark: SparkSession, sf_dir: str, key: tuple, train):
+    def build():
+        df = train(read_table(spark, sf_dir, "embeddings"))
+        return spark.createDataFrame(df.collect(), df.schema)
+
+    return shared_frame(spark, (sf_dir, *key), build)
 
 
 def _trained_centroids(spark: SparkSession, sf_dir: str, k: int = 8,
                        iterations: int = 3):
-    key = ("kmeans", sf_dir, k, iterations)
-    if key not in _TRAINED_MEMO:
-        df = S.kmeans_lloyd(
-            read_table(spark, sf_dir, "embeddings"), k=k, iterations=iterations
-        )
-        _TRAINED_MEMO[key] = (df.schema, df.collect())
-    schema, rows = _TRAINED_MEMO[key]
-    return spark.createDataFrame(rows, schema)
+    return _trained(spark, sf_dir, ("kmeans", k, iterations),
+                    lambda emb: S.kmeans_lloyd(emb, k=k, iterations=iterations))
 
 
 def _trained_codebooks(spark: SparkSession, sf_dir: str, dim: int, m: int,
                        codes: int, iterations: int):
-    key = ("pq", sf_dir, dim, m, codes, iterations)
-    if key not in _TRAINED_MEMO:
-        df = S.pq_train_codebooks(
-            read_table(spark, sf_dir, "embeddings"),
-            dim=dim, m=m, codes=codes, iterations=iterations,
-        )
-        _TRAINED_MEMO[key] = (df.schema, df.collect())
-    schema, rows = _TRAINED_MEMO[key]
-    return spark.createDataFrame(rows, schema)
+    return _trained(spark, sf_dir, ("pq", dim, m, codes, iterations),
+                    lambda emb: S.pq_train_codebooks(
+                        emb, dim=dim, m=m, codes=codes, iterations=iterations))
 
 
 @register(
@@ -953,7 +931,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str):
         S.ivf_assign(emb, centroids)
         .join(labels, F.col("vid") == F.col("vec_id"))
         .select("vid", "vec", "nrm", "cell", "label")
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     q = assigned.filter(F.col("vid") < 10).select(
         F.col("vid").alias("query_id"),
@@ -1021,7 +999,7 @@ def text_stopshingle_discovery(spark: SparkSession, sf_dir: str):
     docs = read_table(spark, sf_dir, "documents")
     ex = docs.select(
         "doc_id", F.explode(D.word_shingles(F.col("text"), 3)).alias("s")
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     nd = ex.select("doc_id").distinct().agg(F.count("*").alias("n"))
     df = ex.groupBy("s").agg(F.count("*").alias("df"))
     return (
@@ -1093,7 +1071,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str):
         .limit(20)
         .select("doc_a", "doc_b", F.col("jaccard").alias("exact_jaccard"))
     )
-    sigs = D.minhash_signatures(docs, num_hashes=8).localCheckpoint(eager=False)
+    sigs = share(D.minhash_signatures(docs, num_hashes=8))
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"sig_{j}").alias(f"a{j}") for j in range(8)],
@@ -1616,7 +1594,7 @@ def text_bigram_surprise(spark: SparkSession, sf_dir: str):
         tok.withColumn("w2", F.lead("w1").over(w))
         .filter(F.col("w2").isNotNull())
         .select("doc_id", (F.col("pos0") + 1).alias("pos"), "w1", "w2")
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     c12 = pairs.groupBy("w1", "w2").agg(F.count("*").alias("pc"))
     c1 = pairs.groupBy("w1").agg(F.count("*").alias("lc"))
@@ -2452,7 +2430,7 @@ def length_outlier_stats(
         group_col,
         id_col,
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("dl"),
-    ).localCheckpoint(eager=False)
+    ).transform(share)
 
     def lower_median(df, val_col, out_col):
         w = Window.partitionBy(group_col).orderBy(val_col, id_col)
@@ -2470,7 +2448,7 @@ def length_outlier_stats(
     dev = (
         lens.join(med, group_col)
         .withColumn("adev", F.abs(F.col("dl") - F.col("med_len")))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     mad = lower_median(dev, "adev", "mad")
     return (
@@ -2536,7 +2514,7 @@ def audit_lang_source_chi2(spark: SparkSession, sf_dir: str):
     cells = (
         docs.groupBy("lang", "source")
         .agg(F.count("*").alias("n_obs"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     rows_t = cells.groupBy("lang").agg(F.sum("n_obs").alias("n_lang"))
     cols_t = cells.groupBy("source").agg(F.sum("n_obs").alias("n_source"))
@@ -4080,7 +4058,7 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str):
     # The w1-marginal is the SUM of the bigram counts — derive it from
     # c12 (vocab^2-cardinality) instead of re-aggregating `pairs`, which
     # would re-execute the corpus explode+window lineage a second time.
-    c12 = c12.localCheckpoint(eager=False)
+    c12 = share(c12)
     c1 = c12.groupBy("w1").agg(F.sum("pair_count").alias("left_count"))
     return (
         c12.join(c1, "w1")
@@ -4921,7 +4899,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str):
     per round (the argmax); the word table stays distributed throughout.
 
     Scale shape: the only corpus-sized shuffle is the distinct-word
-    aggregate, done once and localCheckpoint'ed (vocab-cardinality,
+    aggregate, done once and shared (vocab-cardinality,
     executor-resident).  Each round is a map (string replace) + one
     map-side-combining aggregate over the vocab table, so N rounds cost
     N vocab-sized jobs, never N corpus passes.  Symbol sequences use the
@@ -4956,7 +4934,7 @@ def _bpe_train_loop(docs, n_rounds: int):
         .groupBy("w")
         .agg(F.count("*").alias("c"))
         .select("w", F.regexp_replace("w", "(.)", "<$1>").alias("seq"), "c")
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     merges: list[tuple[int, str, str, int]] = []
     cur = words
@@ -5988,7 +5966,7 @@ def mixture_quality_plan(spark: SparkSession, sf_dir: str):
     # documents scans, only 1 reused.  One checkpoint = one corpus pass.
     cells = banded.groupBy("source", "band").agg(
         F.count("*").alias("n_docs"), F.sum("n_tok").alias("n_tokens")
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     src = cells.groupBy("source").agg(
         F.sum(F.when(F.col("band") == "pass", F.col("n_docs")).otherwise(0)).alias(
             "pass_docs"
@@ -6012,18 +5990,18 @@ def mixture_quality_plan(spark: SparkSession, sf_dir: str):
         ).alias("denom"),
         F.sum("pass_tokens").alias("total_pass_tokens"),
     )
-    share = F.sqrt(F.col("pass_docs").cast("double")) / F.col("denom")
+    src_share = F.sqrt(F.col("pass_docs").cast("double")) / F.col("denom")
     # denom = 0 (NO source has a passing doc) is a legitimate degenerate
     # input — the r13 sf10 audit hit it on a synthetic corpus whose
     # vocabulary words contain digits, failing every doc on the Gopher
     # digit-ratio rule — and the PLAN artifact must come back with zero
     # shares, not an ANSI divide-by-zero (oracle guards identically).
-    share_safe = F.when(F.col("denom") != 0.0, share).otherwise(F.lit(0.0))
+    share_safe = F.when(F.col("denom") != 0.0, src_share).otherwise(F.lit(0.0))
     keep_rate = F.when(
         (F.col("band") == "pass") & (F.col("denom") != 0.0),
         F.least(
             F.lit(1.0),
-            share
+            src_share
             * (F.col("total_pass_tokens").cast("double") / F.lit(2.0))
             / F.col("pass_tokens").cast("double"),
         ),
@@ -6508,7 +6486,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str):
     # three consumers — one embeddings scan total.
     lens = emb.select(
         "label", "vec_id", S.l2_norm(F.col("embedding")).alias("v")
-    ).localCheckpoint(eager=False)
+    ).transform(share)
 
     def lower_median(df, val_col, out_col):
         # distributed per-label median (round 12): 10 labels over the
@@ -6540,7 +6518,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str):
     dev = (
         lens.join(med, "label")
         .withColumn("adev", F.abs(F.col("v") - F.col("med_v")))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     mad = lower_median(dev, "adev", "mad")
     return (
@@ -6649,7 +6627,7 @@ def sim_ivf_probe_curve(spark: SparkSession, sf_dir: str):
     bf = (
         sim_bruteforce_topk(spark, sf_dir)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     total = bf.count()
     queries = emb.filter(F.col("vec_id") < 10)
@@ -6697,7 +6675,7 @@ def sim_recall_report(spark: SparkSession, sf_dir: str):
     bf = (
         sim_bruteforce_topk(spark, sf_dir)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     total = bf.count()
     builders = {
@@ -6784,7 +6762,7 @@ def sim_recall_production(spark: SparkSession, sf_dir: str):
     bf = (
         sim_bruteforce_topk(spark, sf_dir)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     total = bf.count()
     queries = emb.filter(F.col("vec_id") < 10)
@@ -6881,7 +6859,7 @@ def sketch_cms_merge(spark: SparkSession, sf_dir: str):
     # The frame is vocab x 2 rows; one checkpoint = one corpus pass.
     side_counts = tok.groupBy("k", (F.col("doc_id") < 250).alias("__in_a")).agg(
         F.count("*").alias("__w")
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     full = count_min_table(side_counts, "k", weight_col="__w")
     a = count_min_table(
         side_counts.filter(F.col("__in_a")), "k", weight_col="__w"
@@ -6953,7 +6931,7 @@ def sketch_kmv_merge(spark: SparkSession, sf_dir: str):
     docs = read_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     full = kmv_sketch(words, "w", k=_KMV_K)
     a = kmv_sketch(words.filter(F.col("doc_id") < 250), "w", k=_KMV_K)
     b = kmv_sketch(words.filter(F.col("doc_id") >= 250), "w", k=_KMV_K)
@@ -7019,7 +6997,7 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str):
     # checkpoint rule); register build is a map-side-combinable MAX.
     sh = docs.select(
         "doc_id", F.explode(D.word_shingles(F.col("text"), 3)).alias("w")
-    ).localCheckpoint(eager=False)
+    ).transform(share)
     full = hll_registers(sh, "w").withColumnsRenamed({"max_rho": "full_rho"})
     a = hll_registers(sh.filter(F.col("doc_id") < 250), "w")
     b = hll_registers(sh.filter(F.col("doc_id") >= 250), "w")
@@ -7087,9 +7065,7 @@ def sketch_bloom_merge(spark: SparkSession, sf_dir: str):
     from fotmobdatapipeline_spark.operators.sketches import bloom_filter_table
 
     docs = read_table(spark, sf_dir, "documents")
-    keys = docs.select("doc_id", F.col("text").alias("k")).localCheckpoint(
-        eager=False
-    )
+    keys = share(docs.select("doc_id", F.col("text").alias("k")))
     # No distinct: bit_or is idempotent, so duplicate keys cost one extra
     # explode row and nothing else.
     full = bloom_filter_table(keys, "k", m_bits=_BLOOM_M).withColumnsRenamed(
@@ -7439,10 +7415,8 @@ def sketch_hll_daily_rollup(spark: SparkSession, sf_dir: str):
     keyed = ev.select(
         F.date_trunc("day", "ts").cast("date").cast("string").alias("day"),
         "user_id",
-    ).localCheckpoint(eager=False)
-    daily = hll_registers(keyed, "user_id", group_cols=("day",)).localCheckpoint(
-        eager=False
-    )
+    ).transform(share)
+    daily = share(hll_registers(keyed, "user_id", group_cols=("day",)))
     # The merged sketch reads the DAILY REGISTER TABLE, not events.
     total = (
         daily.groupBy("reg_idx")
@@ -8793,7 +8767,7 @@ def text_heaps_curve(spark: SparkSession, sf_dir: str):
     tok = (
         docs.crossJoin(F.broadcast(mx))  # 1-row scalar by construction
         .select(decile.alias("decile"), F.explode(F.split("text", " ")).alias("w"))
-        .localCheckpoint(eager=False)
+        .transform(share)
     )
     per_decile = tok.groupBy("decile").agg(F.count("*").alias("n_tokens"))
     new_words = (
@@ -8963,7 +8937,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str):
     short = (
         cand.orderBy(F.desc("cos_q"), F.asc("vec_id"))
         .limit(_MMR_SHORT)
-        .localCheckpoint(eager=True)
+        .transform(truncate)
     )
     selected = None
     for r in range(1, _MMR_K + 1):
@@ -9002,12 +8976,12 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str):
                 "mmr",
                 F.lit(r).cast("int").alias("rank"),
             )
-            .localCheckpoint(eager=True)
+            .transform(truncate)
         )
         selected = (
             pick
             if selected is None
-            else selected.unionByName(pick).localCheckpoint(eager=True)
+            else truncate(selected.unionByName(pick))
         )
     return selected.select("rank", "vec_id", "cos_q", F.col("mmr").alias("mmr_score"))
 
@@ -9462,7 +9436,7 @@ def _image_blocked(spark: SparkSession, sf_dir: str):
     doc="Image near-dup screen: luma-histogram L1 within dominant-bucket blocks.",
 )
 def multimodal_image_neardup(spark: SparkSession, sf_dir: str):
-    blocked = _image_blocked(spark, sf_dir).localCheckpoint(eager=False)
+    blocked = share(_image_blocked(spark, sf_dir))
     pairs, _dropped = _image_neardup_parts(blocked)
     return pairs
 
@@ -9542,7 +9516,7 @@ _LIFT_TOPK = 50
 )
 def text_bigram_lift(spark: SparkSession, sf_dir: str):
     docs = read_table(spark, sf_dir, "documents")
-    w = docs.select(F.split("text", " ").alias("ws")).localCheckpoint(eager=False)
+    w = share(docs.select(F.split("text", " ").alias("ws")))
     n1 = F.greatest(F.size("ws") - 1, F.lit(0))
     bg = w.select(
         F.explode(
@@ -9553,7 +9527,7 @@ def text_bigram_lift(spark: SparkSession, sf_dir: str):
             )
         ).alias("p")
     ).select("p.w1", "p.w2")
-    bg = bg.localCheckpoint(eager=False)  # two consumers: counts + total
+    bg = share(bg)  # two consumers: counts + total
     cb = (
         bg.groupBy("w1", "w2")
         .agg(F.count("*").alias("n_pair"))
@@ -9784,7 +9758,7 @@ def _dhash_frame(spark: SparkSession, sf_dir: str):
 def _dhash_bands(spark: SparkSession, sf_dir: str):
     """Per-doc dHash exploded into 4 16-bit LSH bands (the Spark twin of
     ``_DHASH_BANDS_CTE``); shared by the pair join and its cap report."""
-    h = _dhash_frame(spark, sf_dir).localCheckpoint(eager=False)
+    h = share(_dhash_frame(spark, sf_dir))
     band_key = (
         F.when(F.col("band_id") == 0, F.col("dhash_lo").bitwiseAND(65535))
         .when(F.col("band_id") == 1, F.shiftright("dhash_lo", 16).bitwiseAND(65535))
@@ -9880,7 +9854,7 @@ _DHASH_BANDS_CTE = f"""
 )
 def multimodal_image_dhash_pairs(spark: SparkSession, sf_dir: str):
     bands = _dhash_bands(spark, sf_dir)
-    bands = bands.localCheckpoint(eager=False)  # two consumers: cap + join
+    bands = share(bands)  # two consumers: cap + join
     ok = (
         bands.groupBy("band_id", "band_key")
         .agg(F.count("*").alias("n"))
@@ -10088,7 +10062,7 @@ def text_bm25_ndcg(spark: SparkSession, sf_dir: str):
     for t in _BM25_TERMS:
         rel_flag = rel_flag & F.array_contains(ws, t)
     rel = docs.select("doc_id", rel_flag.cast("int").alias("rel"))
-    rel = rel.localCheckpoint(eager=False)  # two consumers: join + n_rel
+    rel = share(rel)  # two consumers: join + n_rel
     j = top.join(rel, "doc_id")
     one = j.agg(
         F.sort_array(
@@ -10530,7 +10504,7 @@ def text_retrieval_mrr_map(spark: SparkSession, sf_dir: str):
     for t in _BM25_TERMS:
         rel_flag = rel_flag & F.array_contains(ws, t)
     rel = docs.select("doc_id", rel_flag.cast("int").alias("rel"))
-    rel = rel.localCheckpoint(eager=False)  # two consumers: join + n_rel
+    rel = share(rel)  # two consumers: join + n_rel
     j = top.join(rel, "doc_id")
     one = j.agg(
         F.sort_array(

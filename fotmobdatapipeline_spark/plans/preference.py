@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import share
 from fotmobdatapipeline_spark.operators.preference import (
     UNIT,
     btl_ratings,
@@ -77,7 +78,7 @@ def _docs_with_next(
             out_col="rk",
         )
         .drop("one")
-        .localCheckpoint(eager=False)  # both sides of the successor join
+        .transform(share)  # both sides of the successor join
     )
     nxt = ranked.select(
         "lang",

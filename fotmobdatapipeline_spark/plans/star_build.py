@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from fotmobdatapipeline_spark.lineage import truncate
 from fotmobdatapipeline_spark.operators.star import build_dim, build_fact, denormalize
 from fotmobdatapipeline_spark.sources.registry import read_table
 from fotmobdatapipeline_spark.sources.sinks import write_parquet
@@ -103,7 +104,7 @@ def run_star_build(
     collision-guarded xxhash64 key path (see build_dims) — the setting
     for data-scale dims, where the dense row_number sort cannot run.
 
-    Staged to never recompute lineage: dims are cached (small — the only
+    Staged to never recompute lineage: dims are checkpointed (small — the only
     state worth keeping), the fact is written once and read back for the
     reporting join.  A naive single-lineage version recomputes every dim
     for the fact write and the whole fact for the reporting write; the
@@ -115,17 +116,15 @@ def run_star_build(
 
     from pyspark import inheritable_thread_target
 
+    # Every dim is checkpointed up front (one tiny job each): the
+    # concurrent dim writers AND the fact build below then all read the
+    # same rows instead of racing to compute them.
     dims = {
-        name: df.cache()
+        name: truncate(df)
         for name, df in build_dims(spark, sf_dir, hash_big_dims=hash_big_dims).items()
     }
-    # Populate every dim cache up front (one tiny job each): the
-    # concurrent dim writers AND the fact build below then all read the
-    # materialized cache instead of racing to compute it.
-    for df in dims.values():
-        df.count()
 
-    # The fact write depends only on the (now cached) dims, not on the
+    # The fact write depends only on the (now checkpointed) dims, not on the
     # dim WRITES — run it concurrently with them (guide §2.6: overlap
     # independent jobs so the fact job's tasks back-fill executors the
     # small dim writes leave idle).  r14: this was dims-then-fact
@@ -153,6 +152,4 @@ def run_star_build(
     reporting = build_reporting(fact_back, dims)
     write_parquet(reporting, f"{out_dir}/sales_reporting", partition_by=["order_month"])
     paths["sales_reporting"] = f"{out_dir}/sales_reporting"
-    for df in dims.values():
-        df.unpersist()
     return paths

@@ -15,6 +15,24 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """Set the session's checkpoint directory (which switches
+    ``lineage.share``/``truncate`` to reliable checkpoints) for one
+    test, then restore the previous one — unset if none was set, so no
+    later test silently runs in reliable mode."""
+    sc = spark.sparkContext
+    prev = sc.getCheckpointDir()
+    path = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(path))
+    yield path
+    if prev is not None:
+        sc.setCheckpointDir(prev)
+    else:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() == prev
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

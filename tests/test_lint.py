@@ -265,3 +265,71 @@ def test_thread_pool_lint_catches_an_unwrapped_target():
     found = list(_thread_pools_and_targets(good.body[0]))
     assert len(found) == 2
     assert all(_wraps_inheritable(t, a) for _, t, a in found)
+
+
+# Module-level dicts that are registries filled at import time, not
+# memos filled by query runs.
+_REGISTRY_DICTS = {("plans/catalog.py", "QUERIES")}
+
+
+def _lineage_offenders(tree: ast.AST, rel: str) -> list[str]:
+    """Direct ``localCheckpoint``/``checkpoint`` calls anywhere in
+    ``tree``, and module-level names bound to an empty dict (a memo)."""
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "checkpoint")
+        ):
+            found.append(f"{rel}:{node.lineno} calls .{node.func.attr}()")
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None:
+            empty = (isinstance(node.value, ast.Dict) and not node.value.keys) or (
+                isinstance(node.value, ast.Call)
+                and getattr(node.value.func, "id", None) == "dict"
+                and not node.value.args
+                and not node.value.keywords
+            )
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                if empty and isinstance(t, ast.Name) and (rel, t.id) not in _REGISTRY_DICTS:
+                    found.append(f"{rel}:{node.lineno} module-level memo dict {t.id}")
+    return found
+
+
+def test_lineage_goes_through_the_lineage_module():
+    """Sharing a frame, truncating lineage and memoizing a shared frame
+    go through ``fotmobdatapipeline_spark.lineage`` (``share``,
+    ``truncate``, ``shared_frame``) and nowhere else: that module alone
+    picks local or reliable checkpoints from the session's checkpoint
+    directory, so a direct call elsewhere would ignore it."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        if rel != "lineage.py":
+            offenders += _lineage_offenders(ast.parse(py.read_text()), rel)
+    assert not offenders, "\n".join(offenders)
+
+
+def test_lineage_lint_catches_planted_calls_and_memos():
+    """The rule above must flag each pattern it exists for, and leave
+    the catalog registry and non-empty constant dicts alone."""
+    bad = ast.parse(
+        "_MEMO: dict = {}\n"
+        "_CACHE = dict()\n"
+        "def f(df):\n"
+        "    a = df.localCheckpoint(eager=False)\n"
+        "    b = df.localCheckpoint()\n"
+        "    return a.join(b).checkpoint(eager=True)\n"
+    )
+    assert len(_lineage_offenders(bad, "operators/x.py")) == 5
+    good = ast.parse(
+        "QUERIES: dict[str, int] = {}\n"
+        "_TYPES = {'a': 1}\n"
+        "def f(df):\n"
+        "    memo = {}\n"
+        "    return share(df), truncate(df)\n"
+    )
+    assert _lineage_offenders(good, "plans/catalog.py") == []
+    assert len(_lineage_offenders(good, "plans/other.py")) == 1

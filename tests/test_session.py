@@ -50,3 +50,34 @@ print(json.dumps({
     assert got["exists"] == [True, True]
     assert len(got["dirs"]) == 1 and first.removeprefix("file:").startswith(got["dirs"][0])
     assert not list(tmp_path.glob("fotmob_pkg_*")), "zip directory left after exit"
+
+
+def test_get_spark_defaults_to_the_cpus_this_process_may_use(tmp_path):
+    """With ``SPARK_GRAFT_CPUS`` unset, ``get_spark`` sizes the local
+    master and the shuffle partitions to the CPUs the process may run on
+    (what ``nproc`` prints), not a fixed 32.  The child pins itself to
+    one CPU, so the check holds on a box of any size."""
+    probe = """
+import json, os
+os.sched_setaffinity(0, {min(os.sched_getaffinity(0))})
+from fotmobdatapipeline_spark import session
+spark = session.get_spark(app_name="cpus-default")
+print(json.dumps([spark.sparkContext.master,
+                  spark.conf.get("spark.sql.shuffle.partitions")]))
+spark.stop()
+"""
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_CPUS", "SPARK_MASTER")
+    }
+    env.update(
+        TMPDIR=str(tmp_path),
+        SPARK_DRIVER_MEM="1g",
+        PYTHONPATH=os.pathsep.join([str(REPO), os.environ.get("PYTHONPATH", "")]),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, env=env, cwd=tmp_path,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == ["local[1]", "1"]
