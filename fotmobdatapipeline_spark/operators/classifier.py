@@ -40,7 +40,8 @@ fractions (2^-k) so the literal parses identically everywhere.
 Mergeability: G is a plain sum over rows, so per-shard / per-micro-batch
 Gram matrices fold by cell-wise addition into exactly the whole-corpus
 matrix — the property the streaming model-maintenance sink
-(streaming/sketches.py) is built on, same as the CMS/DSIR sinks.
+(streaming/sketches.py, a statefs fold) is built on, same as the
+CMS/DSIR sinks.
 """
 
 from __future__ import annotations

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from fotmobdatapipeline_spark.lineage import truncate
 from fotmobdatapipeline_spark.operators.star import build_dim, build_fact, denormalize
 from fotmobdatapipeline_spark.sources.registry import read_table
-from fotmobdatapipeline_spark.sources.sinks import write_parquet
+from fotmobdatapipeline_spark.sources.sinks import write_parquet, write_star
 
 
 def build_dims(spark: SparkSession, sf_dir: str, *, hash_big_dims: bool = False) -> dict:
@@ -112,10 +112,6 @@ def run_star_build(
     the fact cannot be cached and the reporting layer must not re-run
     the fact build.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     # Every dim is checkpointed up front (one tiny job each): the
     # concurrent dim writers AND the fact build below then all read the
     # same rows instead of racing to compute them.
@@ -125,28 +121,13 @@ def run_star_build(
     }
 
     # The fact write depends only on the (now checkpointed) dims, not on the
-    # dim WRITES — run it concurrently with them (guide §2.6: overlap
-    # independent jobs so the fact job's tasks back-fill executors the
-    # small dim writes leave idle).  r14: this was dims-then-fact
-    # serial; overlapping removes the dim-write wall from the critical
-    # path (fact write >= dim writes, so the stage costs max, not sum).
+    # dim WRITES — write_star runs it concurrently with them (guide §2.6:
+    # overlap independent jobs so the fact job's tasks back-fill executors
+    # the small dim writes leave idle).  The fact leads the dict so it is
+    # submitted first and never queues behind a dim write in the bounded
+    # pool (ADVICE r14).
     fact = build_fact_df(spark, sf_dir, dims)
-    paths = {name: f"{out_dir}/{name}" for name in dims}
-    paths["sales_fact"] = f"{out_dir}/sales_fact"
-    # Fact submitted FIRST and the pool sized to every writer: if
-    # build_dims ever grows a dim, the fact write must never queue
-    # behind the dim writes (that would restore the dims-then-fact
-    # serialization this overlap removes — ADVICE r14).
-    # The pool threads inherit the caller's job group and tags.
-    write = inheritable_thread_target(spark)(write_parquet)
-    with ThreadPoolExecutor(max_workers=len(dims) + 1) as pool:
-        futures = [pool.submit(write, fact, paths["sales_fact"])]
-        futures.extend(
-            pool.submit(write, df, paths[name])
-            for name, df in dims.items()
-        )
-        for f in futures:
-            f.result()
+    paths = write_star({"sales_fact": fact, **dims}, out_dir)
 
     fact_back = spark.read.parquet(paths["sales_fact"])
     reporting = build_reporting(fact_back, dims)

@@ -5,8 +5,8 @@ win-matrix doctrine).  Counts are plain integer sums, so the maintained
 table is CELL-IDENTICAL to a batch build over the whole feed, and the
 always-valid readout derived from it (``read_msprt_report`` -> the
 shared ``operators/abtest.msprt_report``) is bit-identical to the batch
-entry.  Exactly-once + versioned publication contract shared with the
-sketch/leaderboard/cusum sinks."""
+entry.  Exactly-once + versioned publication contract of every maintenance
+sink (``streaming/statefs.py``)."""
 
 from __future__ import annotations
 
@@ -17,69 +17,7 @@ from fotmobdatapipeline_spark.operators.abtest import (
     msprt_hourly_counts,
     msprt_report,
 )
-from fotmobdatapipeline_spark.streaming.sketches import (
-    _current_version,
-    _publish_version,
-)
-from fotmobdatapipeline_spark.streaming.statefs import StateFs
-
-
-def _merge_maintenance_sink(
-    events: DataFrame,
-    path: str,
-    checkpoint: str,
-    counts_fn,
-    key_cols: list[str],
-    sum_cols: list[str],
-    keep_versions: int = 1,
-    agg_fn=None,
-):
-    """Shared skeleton of the "mergeable integer counts" maintenance
-    sinks: per micro-batch, compute the batch operator's own aggregate
-    over the batch, fold it into the stored table by key-wise SUM
-    (``agg_fn`` overrides the fold — e.g. bit_or for the bloom word
-    table, where merge-of-unions is bitwise OR), and publish under the
-    exactly-once versioned contract (replayed batch ids are no-ops).
-    ONE copy of the replay-guard/merge/publish logic, so a fix cannot
-    silently miss a sibling sink."""
-    if agg_fn is None:
-        agg_fn = F.sum
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = spark.read.parquet(f"{path}/{prev_v}") if prev_v is not None else None
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replay of an already-applied batch: no-op
-        inc = counts_fn(batch_df)
-        if prev is not None:
-            merged = (
-                prev.select(*key_cols, *sum_cols)
-                .unionByName(inc)
-                .groupBy(*key_cols)
-                .agg(
-                    *[
-                        agg_fn(c).cast("bigint").alias(c)
-                        for c in sum_cols
-                    ]
-                )
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(events.sparkSession, path).mkdirs()
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+from fotmobdatapipeline_spark.streaming.statefs import fold_sink, read_state
 
 
 def read_msprt_report(spark, path: str) -> DataFrame | None:
@@ -87,13 +25,10 @@ def read_msprt_report(spark, path: str) -> DataFrame | None:
     hourly-counts table — the SAME shared fold/expression tree the
     batch entry runs, so a drained stream reads bit-identically.  None
     before the first batch commits."""
-    v = _current_version(path, spark)
-    if v is None:
+    t = read_state(spark, path)
+    if t is None:
         return None
-    hourly = spark.read.parquet(f"{path}/{v}").select(
-        "hour", "na", "xa", "nb", "xb"
-    )
-    return msprt_report(hourly)
+    return msprt_report(t.select("hour", "na", "xa", "nb", "xb"))
 
 
 def msprt_maintenance_sink(
@@ -105,13 +40,13 @@ def msprt_maintenance_sink(
     """Fold each micro-batch's hourly conversion-count increments (the
     batch operator's own aggregate over batch-sized input) into the
     stored table by hour-wise SUM."""
-    return _merge_maintenance_sink(
+    return fold_sink(
         events,
         path,
         checkpoint,
         msprt_hourly_counts,
-        key_cols=["hour"],
-        sum_cols=["na", "xa", "nb", "xb"],
+        keys=["hour"],
+        values=["na", "xa", "nb", "xb"],
         keep_versions=keep_versions,
     )
 
@@ -123,11 +58,10 @@ def read_chi2_report(spark, path: str) -> DataFrame | None:
     reads bit-identically.  None before the first batch commits."""
     from fotmobdatapipeline_spark.operators.abtest import chi2_report
 
-    v = _current_version(path, spark)
-    if v is None:
+    t = read_state(spark, path)
+    if t is None:
         return None
-    cells = spark.read.parquet(f"{path}/{v}").select("variant", "event_type", "n")
-    return chi2_report(cells)
+    return chi2_report(t.select("variant", "event_type", "n"))
 
 
 def chi2_maintenance_sink(
@@ -141,13 +75,13 @@ def chi2_maintenance_sink(
     <= 2 x |event types|-row table by cell-wise SUM."""
     from fotmobdatapipeline_spark.operators.abtest import chi2_counts
 
-    return _merge_maintenance_sink(
+    return fold_sink(
         events,
         path,
         checkpoint,
         chi2_counts,
-        key_cols=["variant", "event_type"],
-        sum_cols=["n"],
+        keys=["variant", "event_type"],
+        values=["n"],
         keep_versions=keep_versions,
     )
 
@@ -160,13 +94,10 @@ def read_ams_estimate(spark, path: str) -> DataFrame | None:
     the first batch commits."""
     from fotmobdatapipeline_spark.operators.sketches import AMS_DEPTH, ams_estimate
 
-    v = _current_version(path, spark)
-    if v is None:
+    t = read_state(spark, path)
+    if t is None:
         return None
-    counters = spark.read.parquet(f"{path}/{v}").select(
-        "sketch", *[f"z{i}" for i in range(AMS_DEPTH)]
-    )
-    return ams_estimate(counters)
+    return ams_estimate(t.select("sketch", *[f"z{i}" for i in range(AMS_DEPTH)]))
 
 
 def ams_maintenance_sink(
@@ -182,13 +113,13 @@ def ams_maintenance_sink(
     test_streaming)."""
     from fotmobdatapipeline_spark.operators.sketches import AMS_DEPTH, ams_counters
 
-    return _merge_maintenance_sink(
+    return fold_sink(
         events,
         path,
         checkpoint,
         lambda b: ams_counters(b, "user_id"),
-        key_cols=["sketch"],
-        sum_cols=[f"z{i}" for i in range(AMS_DEPTH)],
+        keys=["sketch"],
+        values=[f"z{i}" for i in range(AMS_DEPTH)],
         keep_versions=keep_versions,
     )
 
@@ -211,7 +142,7 @@ def bloom_index_sink(
     m/32-row index without touching the corpus."""
     from fotmobdatapipeline_spark.operators.sketches import bloom_filter_table
 
-    return _merge_maintenance_sink(
+    return fold_sink(
         docs,
         path,
         checkpoint,
@@ -222,10 +153,10 @@ def bloom_index_sink(
             "k",
             m_bits=m_bits,
         ),
-        key_cols=["word_idx"],
-        sum_cols=["bits"],
+        keys=["word_idx"],
+        values=["bits"],
         keep_versions=keep_versions,
-        agg_fn=F.bit_or,
+        merge=F.bit_or,
     )
 
 
@@ -233,7 +164,5 @@ def read_bloom_index(spark, path: str) -> DataFrame | None:
     """The CURRENT maintained bloom word table (word_idx, bits) — feed
     it to operators/sketches.bloom_probe / bloom_prefilter.  None
     before the first batch commits."""
-    v = _current_version(path, spark)
-    if v is None:
-        return None
-    return spark.read.parquet(f"{path}/{v}").select("word_idx", "bits")
+    t = read_state(spark, path)
+    return None if t is None else t.select("word_idx", "bits")

@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from fotmobdatapipeline_spark.streaming.statefs import fold_sink, read_state
+
 # Physical schema of events.parquet when ts is TIMESTAMP(NANOS): the
 # file-stream source must read ts as long (nanosAsLong) and convert.
 # Generator versions that write TIMESTAMP(MICROS) read natively; the
@@ -561,54 +563,22 @@ def type_mix_maintenance_sink(
     answerable at any moment without rescanning history.  Counts are
     exact mergeable integers (the CMS-sink shape with the sketch
     replaced by the true per-type tally — type cardinality is tiny, so
-    exactness is free); replay-idempotent via the stored last_batch
-    guard; versioned-immutable state behind an atomic CURRENT pointer
-    (Hadoop FileSystem API via streaming/statefs.py — local or any
-    warehouse URI, same protocol as the sketch sinks).
+    exactness is free); replay-idempotent and versioned behind an
+    atomic CURRENT pointer like every maintenance sink
+    (streaming/statefs.py — local or any warehouse URI).
 
     Each batch: one combinable groupBy of the micro-batch + a
     type-keyed merge of two #types-row tables."""
-    from fotmobdatapipeline_spark.streaming.sketches import (
-        _current_version,
-        _publish_version,
-    )
-    from fotmobdatapipeline_spark.streaming.statefs import StateFs
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = (
-            spark.read.parquet(f"{path}/{prev_v}")
-            if prev_v is not None
-            else None
-        )
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replayed batch: already counted
-        inc = batch_df.groupBy(F.col(type_col).alias("event_type")).agg(
+    return fold_sink(
+        events,
+        path,
+        checkpoint,
+        lambda b: b.groupBy(F.col(type_col).alias("event_type")).agg(
             F.count("*").alias("n")
-        )
-        if prev is not None:
-            merged = (
-                prev.select("event_type", "n")
-                .unionByName(inc)
-                .groupBy("event_type")
-                .agg(F.sum("n").alias("n"))
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(events.sparkSession, path).mkdirs()
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        ),
+        keys=["event_type"],
+        values=["n"],
+        keep_versions=keep_versions,
     )
 
 
@@ -618,14 +588,10 @@ def read_type_mix_drift(spark, path: str, baseline: DataFrame) -> DataFrame | No
     exact-integer-division columns as the batch drift entry, derived
     from stored counts (the feed is never rescanned).  None before the
     first commit."""
-    from fotmobdatapipeline_spark.streaming.sketches import _current_version
-
-    v = _current_version(path, spark)
-    if v is None:
+    t = read_state(spark, path)
+    if t is None:
         return None
-    cur = spark.read.parquet(f"{path}/{v}").select(
-        "event_type", F.col("n").alias("n_cur")
-    )
+    cur = t.select("event_type", F.col("n").alias("n_cur"))
     tot_c = cur.agg(F.sum("n_cur").alias("tc"))
     tot_b = baseline.agg(F.sum("n_base").alias("tb"))
     joined = (
@@ -664,47 +630,18 @@ def hourly_cents_maintenance_sink(
     build over the whole feed, and a CUSUM report read from it
     (``read_cusum_report`` -> the shared ``cusum_hourly_report`` fold)
     is bit-identical to the batch entry.  Exactly-once + versioned
-    publication contract as the sketch sinks."""
+    publication contract of every maintenance sink
+    (streaming/statefs.py)."""
     from fotmobdatapipeline_spark.operators.timeseries import hourly_cents
-    from fotmobdatapipeline_spark.streaming.sketches import (
-        _current_version,
-        _publish_version,
-    )
-    from fotmobdatapipeline_spark.streaming.statefs import StateFs
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = (
-            spark.read.parquet(f"{path}/{prev_v}")
-            if prev_v is not None
-            else None
-        )
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replayed batch: already folded
-        inc = hourly_cents(batch_df)
-        if prev is not None:
-            merged = (
-                prev.select("event_type", "ho", "cents")
-                .unionByName(inc)
-                .groupBy("event_type", "ho")
-                .agg(F.sum("cents").alias("cents"))
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(events.sparkSession, path).mkdirs()
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return fold_sink(
+        events,
+        path,
+        checkpoint,
+        hourly_cents,
+        keys=["event_type", "ho"],
+        values=["cents"],
+        keep_versions=keep_versions,
     )
 
 
@@ -714,12 +651,10 @@ def read_cusum_report(spark, path: str) -> DataFrame | None:
     reads bit-identically to events_cusum_hourly over the full feed.
     None before the first batch commits."""
     from fotmobdatapipeline_spark.operators.timeseries import cusum_hourly_report
-    from fotmobdatapipeline_spark.streaming.sketches import _current_version
 
-    v = _current_version(path, spark)
-    if v is None:
+    t = read_state(spark, path)
+    if t is None:
         return None
-    t = spark.read.parquet(f"{path}/{v}")
     return cusum_hourly_report(t.select("event_type", "ho", "cents"))
 
 
@@ -732,10 +667,8 @@ def read_holt_winters_report(spark, path: str) -> DataFrame | None:
     from fotmobdatapipeline_spark.operators.timeseries import (
         holt_winters_hourly_report,
     )
-    from fotmobdatapipeline_spark.streaming.sketches import _current_version
 
-    v = _current_version(path, spark)
-    if v is None:
+    t = read_state(spark, path)
+    if t is None:
         return None
-    t = spark.read.parquet(f"{path}/{v}")
     return holt_winters_hourly_report(t.select("event_type", "ho", "cents"))

@@ -10,9 +10,9 @@ never a rescan of image history.  Hamming-tolerant matching composes
 downstream exactly as in batch (banded equi-join on the stored table's
 hash quarters).
 
-Exactly-once + versioned publication contract is shared with the
-CMS/HLL/DSIR/leaderboard sinks (streaming/sketches.py): a last_batch
-replay guard makes foreachBatch replays no-ops, each batch writes an
+Exactly-once + versioned publication contract is shared with every
+maintenance sink (streaming/statefs.py): a replay guard read from the
+CURRENT pointer makes foreachBatch replays no-ops, each batch writes an
 immutable ``v{batch_id}`` dir behind an atomic CURRENT pointer.
 
 At 100 TB of image history the stored table is distinct-fingerprint
@@ -26,11 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fotmobdatapipeline_spark.streaming.sketches import (
-    _current_version,
-    _publish_version,
-)
-from fotmobdatapipeline_spark.streaming.statefs import StateFs
+from fotmobdatapipeline_spark.streaming.statefs import fold_sink, read_state
 
 
 def _dhash_counts(batch_docs: DataFrame, width: int, height: int) -> DataFrame:
@@ -56,12 +52,10 @@ def read_dhash_clusters(spark, path: str) -> DataFrame | None:
     batch commits.  A drained stream reads cell-identically to the
     batch groupBy over the full document feed (pinned in
     tests/test_multimodal.py)."""
-    v = _current_version(path, spark)
-    if v is None:
+    t = read_state(spark, path)
+    if t is None:
         return None
-    return spark.read.parquet(f"{path}/{v}").select(
-        "dhash_hi", "dhash_lo", "n_docs", "last_batch"
-    )
+    return t.select("dhash_hi", "dhash_lo", "n_docs", "last_batch")
 
 
 def dhash_cluster_maintenance_sink(
@@ -76,34 +70,12 @@ def dhash_cluster_maintenance_sink(
     each micro-batch runs the batch tier's map-only encode+hash stages
     and one hash aggregate over BATCH-sized input, then folds into the
     stored table by fingerprint-wise SUM."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = spark.read.parquet(f"{path}/{prev_v}") if prev_v is not None else None
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replay of an already-applied batch: no-op
-        inc = _dhash_counts(batch_df, width, height)
-        if prev is not None:
-            merged = (
-                prev.select("dhash_hi", "dhash_lo", "n_docs")
-                .unionByName(inc)
-                .groupBy("dhash_hi", "dhash_lo")
-                .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(stream.sparkSession, path).mkdirs()
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return fold_sink(
+        stream,
+        path,
+        checkpoint,
+        lambda b: _dhash_counts(b, width, height),
+        keys=["dhash_hi", "dhash_lo"],
+        values=["n_docs"],
+        keep_versions=keep_versions,
     )

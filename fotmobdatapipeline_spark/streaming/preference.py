@@ -11,10 +11,10 @@ matrix is equally mergeable, but the MM iteration itself is a batch
 job over the (small) matrix, so the intended deployment is "stream
 maintains counts, a periodic batch job re-solves ratings".
 
-Exactly-once + versioned publication contract is shared with the
-CMS/HLL/DSIR sinks (streaming/sketches.py): a last_batch replay guard
-makes foreachBatch replays no-ops, each batch writes an immutable
-``v{batch_id}`` dir behind an atomic CURRENT pointer, and
+Exactly-once + versioned publication contract is shared with every
+maintenance sink (streaming/statefs.py): a replay guard read from the
+CURRENT pointer makes foreachBatch replays no-ops, each batch writes an
+immutable ``v{batch_id}`` dir behind an atomic CURRENT pointer, and
 ``keep_versions`` prior versions are retained for in-flight readers.
 
 At 100 TB of battle history the stored table is model-cardinality rows;
@@ -25,17 +25,12 @@ model-keyed merge of two small tables.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from fotmobdatapipeline_spark.operators.preference import (
     side_win_counts,
     with_rates,
 )
-from fotmobdatapipeline_spark.streaming.sketches import (
-    _current_version,
-    _publish_version,
-)
-from fotmobdatapipeline_spark.streaming.statefs import StateFs
+from fotmobdatapipeline_spark.streaming.statefs import fold_sink, read_state
 
 
 def read_leaderboard(spark, path: str) -> DataFrame | None:
@@ -44,10 +39,9 @@ def read_leaderboard(spark, path: str) -> DataFrame | None:
     (win_rate, smoothed_rate) expressions as the batch operator, so a
     drained stream reads bit-identically to ``win_rates`` over the
     full history.  None before the first batch commits."""
-    v = _current_version(path, spark)
-    if v is None:
+    t = read_state(spark, path)
+    if t is None:
         return None
-    t = spark.read.parquet(f"{path}/{v}")
     return with_rates(t.select("model", "n_battles", "n_wins", "last_batch")).select(
         "model", "n_battles", "n_wins", "win_rate", "smoothed_rate", "last_batch"
     )
@@ -67,42 +61,15 @@ def leaderboard_maintenance_sink(
     (one explode + one hash aggregate — the batch operator's shape over
     batch-sized input) and folds into the stored table by model-wise
     SUM."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = (
-            spark.read.parquet(f"{path}/{prev_v}") if prev_v is not None else None
-        )
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replay of an already-applied batch: no-op
-        # The batch operator's own aggregate — ONE definition of a win.
-        inc = side_win_counts(batch_df, model_a, model_b, winner)
-        if prev is not None:
-            merged = (
-                prev.select("model", "n_battles", "n_wins")
-                .unionByName(inc)
-                .groupBy("model")
-                .agg(
-                    F.sum("n_battles").alias("n_battles"),
-                    F.sum("n_wins").alias("n_wins"),
-                )
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(stream.sparkSession, path).mkdirs()
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    # The batch operator's own aggregate — ONE definition of a win.
+    return fold_sink(
+        stream,
+        path,
+        checkpoint,
+        lambda b: side_win_counts(b, model_a, model_b, winner),
+        keys=["model"],
+        values=["n_battles", "n_wins"],
+        keep_versions=keep_versions,
     )
 
 
@@ -116,10 +83,9 @@ def read_win_matrix(spark, path: str, smooth: int = 1) -> DataFrame | None:
         smoothed_matrix_from_pairs,
     )
 
-    v = _current_version(path, spark)
-    if v is None:
+    t = read_state(spark, path)
+    if t is None:
         return None
-    t = spark.read.parquet(f"{path}/{v}")
     return smoothed_matrix_from_pairs(t.select("m1", "m2", "w1", "w2"), smooth)
 
 
@@ -139,38 +105,15 @@ def win_matrix_maintenance_sink(
     folds by (m1, m2)-wise SUM, so the maintained matrix is
     CELL-IDENTICAL to a batch build over the whole history and
     btl_ratings(read_win_matrix(...)) is bit-identical to the batch
-    solve.  Exactly-once + versioned contract as the sketch sinks."""
+    solve."""
     from fotmobdatapipeline_spark.operators.preference import raw_pair_counts
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = (
-            spark.read.parquet(f"{path}/{prev_v}") if prev_v is not None else None
-        )
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replay of an already-applied batch: no-op
-        inc = raw_pair_counts(batch_df, model_a, model_b, winner)
-        if prev is not None:
-            merged = (
-                prev.select("m1", "m2", "w1", "w2")
-                .unionByName(inc)
-                .groupBy("m1", "m2")
-                .agg(F.sum("w1").alias("w1"), F.sum("w2").alias("w2"))
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(stream.sparkSession, path).mkdirs()
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return fold_sink(
+        stream,
+        path,
+        checkpoint,
+        lambda b: raw_pair_counts(b, model_a, model_b, winner),
+        keys=["m1", "m2"],
+        values=["w1", "w2"],
+        keep_versions=keep_versions,
     )

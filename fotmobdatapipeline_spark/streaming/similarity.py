@@ -369,7 +369,7 @@ def semantic_ingest_sink(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         sfs = StateFs(spark, path)
-        deltas, applied = _read_manifest(path, spark)
+        deltas, applied = _read_manifest(spark, path)
         if deltas is None:
             # First commit: persist the seed corpus as the base delta
             # (schema normalized so every delta dir unions cleanly).
@@ -493,35 +493,21 @@ def _read_deltas(spark, path: str, deltas) -> DataFrame | None:
     return out
 
 
-def _read_manifest(path: str, spark=None):
+def _read_manifest(spark, path: str):
     """(delta dir list, applied batch-id set) from the CURRENT manifest,
     or (None, None) before the first commit.  Lines starting with
     ``#applied d{N}`` are annotations a compaction writes to preserve
     the applied-id set after folding the per-batch dirs away — they are
-    parsed into ``applied`` but are NOT delta dirs.
+    parsed into ``applied`` but are NOT delta dirs.  Reads go through
+    the Hadoop FileSystem API (any warehouse scheme)."""
+    from fotmobdatapipeline_spark.streaming.statefs import StateFs
 
-    With a SparkSession the reads go through the Hadoop FileSystem API
-    (any warehouse scheme); the spark-less form is a driver-local
-    convenience for tests/diagnostics on plain paths."""
-    import os
-
-    if spark is not None:
-        from fotmobdatapipeline_spark.streaming.statefs import StateFs
-
-        sfs = StateFs(spark, path)
-        manifest = sfs.read_text("CURRENT")
-        if manifest is None:
-            return None, None
-        body = sfs.read_text(manifest.strip()) or ""
-        lines = [ln for ln in body.splitlines() if ln]
-    else:
-        cur = os.path.join(path, "CURRENT")
-        if not os.path.exists(cur):
-            return None, None
-        with open(cur) as f:
-            manifest = f.read().strip()
-        with open(os.path.join(path, manifest)) as f:
-            lines = [ln for ln in f.read().splitlines() if ln]
+    sfs = StateFs(spark, path)
+    manifest = sfs.read_text("CURRENT")
+    if manifest is None:
+        return None, None
+    body = sfs.read_text(manifest.strip()) or ""
+    lines = [ln for ln in body.splitlines() if ln]
     deltas = [ln for ln in lines if not ln.startswith("#")]
     applied = set()
     for d in deltas:
@@ -536,7 +522,7 @@ def _read_manifest(path: str, spark=None):
 def read_semantic_index(spark, path: str) -> DataFrame | None:
     """The admitted-vector index = union of the CURRENT manifest's
     delta dirs, or None before the first commit."""
-    deltas, _ = _read_manifest(path, spark)
+    deltas, _ = _read_manifest(spark, path)
     if not deltas:
         return None
     return _read_deltas(spark, path, deltas)
@@ -559,7 +545,7 @@ def compact_semantic_index(spark, path: str) -> int:
     Returns the number of delta dirs folded (0 = nothing to do)."""
     from fotmobdatapipeline_spark.streaming.statefs import StateFs
 
-    deltas, applied = _read_manifest(path, spark)
+    deltas, applied = _read_manifest(spark, path)
     if not deltas or len(deltas) <= 1:
         return 0
     max_batch = max(applied) if applied else 0

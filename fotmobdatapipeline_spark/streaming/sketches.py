@@ -1,24 +1,17 @@
 """Incremental sketch maintenance over a stream: keep a count-min
-sketch of an unbounded feed up to date per micro-batch, so "how often
-has this key been seen, ever" is answerable at any moment without
+sketch, HLL registers, the DSIR model counts or the quality-probe Gram
+row of an unbounded feed up to date per micro-batch, so "how often has
+this key been seen, ever" is answerable at any moment without
 rescanning history — the streaming face of the mergeable-sketch family
 (``operators/sketches.py``; mergeability is what makes per-batch
 increments correct: cell-summing a batch's sketch into the stored one
 equals the sketch of the union, pinned as data by ``sketch_cms_merge``).
 
-Exactly-once: ``foreachBatch`` may REPLAY a batch after failure, and a
-replayed cell-sum would double-count.  The sink stores the last applied
-batch id inside the versioned table and skips batches it has already
-applied — the standard idempotent-foreachBatch pattern (state lives in
-the table, not the operator).
-
-Concurrent reads: each batch writes a NEW version directory
-(``v{batch_id}``) and atomically swings a ``CURRENT`` pointer file, so
-a reader never observes a half-written or deleted version; the
-previous version is retained for in-flight readers and older ones are
-garbage-collected (retention = 1 prior version — raise it for slower
-readers).  This is the Delta-less table-swap pattern; with Delta
-available the whole sink is a MERGE.
+Every sink here is a :func:`~fotmobdatapipeline_spark.streaming.statefs.fold_sink`:
+the exactly-once replay guard, the immutable ``v{batch_id}`` version
+dirs behind an atomic CURRENT pointer and the ``keep_versions``
+retention live in ``streaming/statefs.py``; read the stored table with
+``statefs.read_state``.  With Delta available each sink is a MERGE.
 
 At 100 TB: the stored table is depth*width rows regardless of feed
 size; each batch does one bounded-shuffle sketch build plus a
@@ -27,57 +20,11 @@ cell-keyed merge of two tiny tables.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fotmobdatapipeline_spark.operators.sketches import count_min_table
-from fotmobdatapipeline_spark.streaming.statefs import StateFs
-
-
-def _current_version(path: str, spark=None) -> str | None:
-    """CURRENT pointer content, or None before the first commit.  With
-    a SparkSession the read goes through the Hadoop FileSystem API so
-    any warehouse scheme (hdfs://, s3a://, ...) resolves; the
-    spark-less form is a driver-local convenience for tests and
-    diagnostics on plain paths."""
-    if spark is not None:
-        txt = StateFs(spark, path).read_text("CURRENT")
-        return txt.strip() if txt else None
-    cur = os.path.join(path, "CURRENT")
-    if not os.path.exists(cur):
-        return None
-    with open(cur) as f:
-        return f.read().strip()
-
-
-def _publish_version(sfs: StateFs, new_v: str, keep_versions: int) -> None:
-    """Swing CURRENT to ``new_v`` (atomic per the statefs scheme rules)
-    and GC version dirs beyond the retention horizon: the new version
-    plus the ``keep_versions`` most recent priors survive."""
-    sfs.write_text_atomic("CURRENT", new_v)
-    versions = sorted(
-        (
-            d
-            for d in sfs.listdir(dirs_only=True)
-            if d.startswith("v") and d != new_v
-        ),
-        key=lambda d: int(d[1:]),
-        reverse=True,
-    )
-    for d in versions[keep_versions:]:
-        sfs.delete(d, recursive=True)
-
-
-def read_cms_state(spark, path: str) -> DataFrame | None:
-    """The CURRENT version of the stored sketch, or None before the
-    first batch commits.  Versions are immutable once pointed at, so
-    no listing-cache race is possible."""
-    v = _current_version(path, spark)
-    if v is None:
-        return None
-    return spark.read.parquet(f"{path}/{v}")
+from fotmobdatapipeline_spark.streaming.statefs import fold_sink
 
 
 def cms_maintenance_sink(
@@ -90,63 +37,20 @@ def cms_maintenance_sink(
     keep_versions: int = 1,
 ):
     """Start a stream that folds each micro-batch into the stored CMS
-    idempotently.  Stored schema: (sketch_row, bucket, cnt, last_batch)
-    — last_batch rides every row (constant within a version) so replay
-    detection needs no side table.
+    idempotently.  Stored schema: (sketch_row, bucket, cnt, last_batch).
 
     ``path`` may be any warehouse URI the cluster's Hadoop configuration
-    resolves (hdfs://, s3a://, local, ...): all pointer/listing/GC I/O
-    goes through the Hadoop FileSystem API (``streaming/statefs.py``;
-    see its docstring for per-scheme pointer-swap atomicity).
-    ``keep_versions`` = how many prior versions survive each commit's
-    GC (default 1)."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = (
-            spark.read.parquet(f"{path}/{prev_v}")
-            if prev_v is not None
-            else None
-        )
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replay of an already-applied batch: no-op
-        inc = count_min_table(
-            batch_df.select(F.col(key_col)), key_col, depth, width
-        )
-        if prev is not None:
-            merged = (
-                prev.select("sketch_row", "bucket", "cnt")
-                .unionByName(inc)
-                .groupBy("sketch_row", "bucket")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(stream.sparkSession, path).mkdirs()
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    resolves (hdfs://, s3a://, local, ...).  ``keep_versions`` = how
+    many prior versions survive each commit's GC (default 1)."""
+    return fold_sink(
+        stream,
+        path,
+        checkpoint,
+        lambda b: count_min_table(b.select(F.col(key_col)), key_col, depth, width),
+        keys=["sketch_row", "bucket"],
+        values=["cnt"],
+        keep_versions=keep_versions,
     )
-
-
-def read_hll_state(spark, path: str) -> DataFrame | None:
-    """CURRENT version of the stored HLL register table, or None before
-    the first batch commits (same versioned-immutable layout as the
-    CMS sink)."""
-    v = _current_version(path, spark)
-    if v is None:
-        return None
-    return spark.read.parquet(f"{path}/{v}")
 
 
 def hll_maintenance_sink(
@@ -168,66 +72,20 @@ def hll_maintenance_sink(
     Stored schema: (reg_idx, max_rho, last_batch).  At 100 TB the
     stored table is m rows forever; each batch does one bounded
     register build plus a register-keyed merge of two m-row tables.
-
-    DEPLOYMENT (r7, closing the ADVICE r5 constraint): all state I/O
-    goes through the Hadoop FileSystem API (``streaming/statefs.py``),
-    so ``path`` may be a local dir OR any warehouse URI — hdfs:// and
-    local get an atomic FileContext rename of the CURRENT pointer,
-    object stores a single atomic PUT.  ``keep_versions`` controls GC
-    breadth: each commit retains the new version plus the
-    ``keep_versions`` most recent prior versions (default 1 — the
-    previous version survives so a reader that resolved CURRENT just
-    before the commit can still finish its collect; raise it for slow
-    readers that may lag several commits, at m rows per retained
-    version the cost is nil)."""
+    Raise ``keep_versions`` for slow readers that may lag several
+    commits; at m rows per retained version the cost is nil."""
     from fotmobdatapipeline_spark.operators.sketches import hll_registers
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = (
-            spark.read.parquet(f"{path}/{prev_v}")
-            if prev_v is not None
-            else None
-        )
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replayed batch: already folded in
-        inc = hll_registers(batch_df.select(F.col(key_col)), key_col, m=m)
-        if prev is not None:
-            merged = (
-                prev.select("reg_idx", "max_rho")
-                .unionByName(inc)
-                .groupBy("reg_idx")
-                .agg(F.max("max_rho").alias("max_rho"))
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(stream.sparkSession, path).mkdirs()
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return fold_sink(
+        stream,
+        path,
+        checkpoint,
+        lambda b: hll_registers(b.select(F.col(key_col)), key_col, m=m),
+        keys=["reg_idx"],
+        values=["max_rho"],
+        merge=F.max,
+        keep_versions=keep_versions,
     )
-
-
-def read_dsir_model(spark, path: str) -> DataFrame | None:
-    """CURRENT version of the stored DSIR model table (bucket, ct, cs,
-    last_batch), or None before the first batch commits (same
-    versioned-immutable layout as the CMS/HLL sinks).  Feed it to
-    ``operators.selection.dsir_ratio_from_counts`` (and on to
-    ``dsir_ratio_vector`` / ``dsir_score_stream``) for scoring."""
-    v = _current_version(path, spark)
-    if v is None:
-        return None
-    return spark.read.parquet(f"{path}/{v}")
 
 
 def dsir_model_maintenance_sink(
@@ -247,59 +105,19 @@ def dsir_model_maintenance_sink(
     a batch build over the whole feed (the mergeability the batch
     operator documents), and the derived ratios/weights are therefore
     bit-identical — model freshness costs one bounded aggregate per
-    batch, never a rescan.
-
-    Same exactly-once + versioned-publication contract as
-    ``cms_maintenance_sink`` (last_batch replay guard, immutable
-    ``v{batch_id}`` dirs behind an atomic CURRENT pointer,
-    ``keep_versions`` retention)."""
+    batch, never a rescan.  Feed ``read_state`` of ``path`` to
+    ``operators.selection.dsir_ratio_from_counts`` for scoring."""
     from fotmobdatapipeline_spark.operators.selection import dsir_bucket_counts
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = (
-            spark.read.parquet(f"{path}/{prev_v}")
-            if prev_v is not None
-            else None
-        )
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replay of an already-applied batch: no-op
-        inc = dsir_bucket_counts(batch_df, is_target, text_col, buckets)
-        if prev is not None:
-            merged = (
-                prev.select("bucket", "ct", "cs")
-                .unionByName(inc)
-                .groupBy("bucket")
-                .agg(F.sum("ct").alias("ct"), F.sum("cs").alias("cs"))
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(stream.sparkSession, path).mkdirs()
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return fold_sink(
+        stream,
+        path,
+        checkpoint,
+        lambda b: dsir_bucket_counts(b, is_target, text_col, buckets),
+        keys=["bucket"],
+        values=["ct", "cs"],
+        keep_versions=keep_versions,
     )
-
-
-def read_probe_gram(spark, path: str) -> DataFrame | None:
-    """CURRENT version of the maintained classifier Gram row (columns
-    ``g_{j}_{k}`` + last_batch), or None before the first commit.
-    Unpack with ``operators.classifier.gram_matrices`` and retrain with
-    ``gd_weights`` — O(d^2) driver work, no corpus rescan."""
-    v = _current_version(path, spark)
-    if v is None:
-        return None
-    return spark.read.parquet(f"{path}/{v}")
 
 
 def probe_gram_maintenance_sink(
@@ -320,48 +138,19 @@ def probe_gram_maintenance_sink(
     feed, and weights retrained from it (driver-side GD, O(d^2)) are
     therefore BIT-identical to batch training.  Model freshness costs
     one bounded zero-shuffle aggregate per batch, never a rescan.
-
-    Same exactly-once + versioned-publication contract as
-    ``cms_maintenance_sink`` / ``dsir_model_maintenance_sink``
-    (last_batch replay guard, immutable ``v{batch_id}`` dirs behind an
-    atomic CURRENT pointer, ``keep_versions`` retention)."""
+    Unpack ``read_state`` of ``path`` with
+    ``operators.classifier.gram_matrices``."""
     from fotmobdatapipeline_spark.operators.classifier import (
         _gram_cols,
         probe_gram,
     )
 
-    cols = [f"g_{j}_{k}" for j, k in _gram_cols(d)]
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sfs = StateFs(spark, path)
-        prev_v = _current_version(path, spark)
-        prev = (
-            spark.read.parquet(f"{path}/{prev_v}")
-            if prev_v is not None
-            else None
-        )
-        if prev is not None:
-            applied = prev.agg(F.max("last_batch")).first()[0]
-            if applied is not None and batch_id <= applied:
-                return  # replay of an already-applied batch: no-op
-        inc = probe_gram(batch_df, is_positive, text_col, d, salt)
-        if prev is not None:
-            merged = (
-                prev.select(*cols)
-                .unionByName(inc)
-                .agg(*[F.sum(c).alias(c) for c in cols])
-            )
-        else:
-            merged = inc
-        out = merged.withColumn("last_batch", F.lit(batch_id))
-        new_v = f"v{batch_id}"
-        out.coalesce(1).write.mode("overwrite").parquet(f"{path}/{new_v}")
-        _publish_version(sfs, new_v, keep_versions)
-
-    StateFs(stream.sparkSession, path).mkdirs()
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return fold_sink(
+        stream,
+        path,
+        checkpoint,
+        lambda b: probe_gram(b, is_positive, text_col, d, salt),
+        keys=[],
+        values=[f"g_{j}_{k}" for j, k in _gram_cols(d)],
+        keep_versions=keep_versions,
     )

@@ -132,10 +132,8 @@ def test_probe_gram_maintenance_stream_equals_batch(spark, tmp_path):
     """Draining a 3-batch feed through the sink leaves a Gram row
     CELL-identical to the batch build over the whole feed, and weights
     retrained from it are BIT-identical to batch training."""
-    from fotmobdatapipeline_spark.streaming.sketches import (
-        probe_gram_maintenance_sink,
-        read_probe_gram,
-    )
+    from fotmobdatapipeline_spark.streaming.sketches import probe_gram_maintenance_sink
+    from fotmobdatapipeline_spark.streaming.statefs import read_state
 
     docs = _docs(spark)
     src = tmp_path / "src"
@@ -157,7 +155,7 @@ def test_probe_gram_maintenance_stream_equals_batch(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    streamed = read_probe_gram(spark, str(tmp_path / "model")).first()
+    streamed = read_state(spark, str(tmp_path / "model")).first()
     want = probe_gram(docs, F.col("y") == 1).first()
     for j, k in _gram_cols(_D):
         c = f"g_{j}_{k}"

@@ -333,3 +333,67 @@ def test_lineage_lint_catches_planted_calls_and_memos():
     )
     assert _lineage_offenders(good, "plans/catalog.py") == []
     assert len(_lineage_offenders(good, "plans/other.py")) == 1
+
+
+# Streaming modules with a state protocol of their own: the semantic
+# index keeps a manifest of append-only deltas, and the incremental sink
+# writes partitions, not versions.
+_OWN_STATE_PROTOCOL = {"streaming/similarity.py", "streaming/incremental.py"}
+
+
+def _versioned_state_offenders(tree: ast.AST, rel: str) -> list[str]:
+    """``writeStream.foreachBatch`` calls, ``"CURRENT"`` pointer names
+    and ``max``/``min`` aggregates over ``last_batch`` in ``tree``."""
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "foreachBatch":
+            found.append(f"{rel}:{node.lineno} calls foreachBatch")
+        elif isinstance(node, ast.Constant) and node.value == "CURRENT":
+            found.append(f"{rel}:{node.lineno} names the CURRENT pointer")
+        elif (
+            isinstance(node, ast.Call)
+            and (getattr(node.func, "id", None) or getattr(node.func, "attr", None))
+            in ("max", "min", "greatest", "least")
+            and any(
+                isinstance(a, ast.Constant) and a.value == "last_batch"
+                for arg in node.args
+                for a in ast.walk(arg)
+            )
+        ):
+            found.append(f"{rel}:{node.lineno} aggregates last_batch")
+    return found
+
+
+def test_versioned_state_goes_through_statefs():
+    """The versioned-state protocol — the foreachBatch fold, the CURRENT
+    pointer and the replay guard — lives in ``streaming/statefs.py``
+    alone (``fold_sink``, ``read_state``), so a fix to it cannot miss a
+    hand-copied sink."""
+    offenders = []
+    for py in sorted(PKG.rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        if rel != "streaming/statefs.py" and rel not in _OWN_STATE_PROTOCOL:
+            offenders += _versioned_state_offenders(ast.parse(py.read_text()), rel)
+    assert not offenders, "\n".join(offenders)
+
+
+def test_versioned_state_lint_catches_a_hand_rolled_sink():
+    """The rule above must flag each piece of a hand-copied sink and
+    leave a thin ``fold_sink`` call and a ``last_batch`` read alone."""
+    bad = ast.parse(
+        "def sink(stream, path, checkpoint):\n"
+        "    def apply_batch(batch_df, batch_id):\n"
+        "        v = StateFs(spark, path).read_text('CURRENT')\n"
+        "        prev = spark.read.parquet(f'{path}/{v}')\n"
+        "        applied = prev.agg(F.max('last_batch')).first()[0]\n"
+        "        sfs.write_text_atomic('CURRENT', f'v{batch_id}')\n"
+        "    return stream.writeStream.foreachBatch(apply_batch).start()\n"
+    )
+    assert len(_versioned_state_offenders(bad, "streaming/x.py")) == 4
+    good = ast.parse(
+        "def sink(stream, path, checkpoint):\n"
+        "    return fold_sink(stream, path, checkpoint, inc, keys=['k'], values=['n'])\n"
+        "def read(spark, path):\n"
+        "    return read_state(spark, path).select('k', 'n', 'last_batch')\n"
+    )
+    assert _versioned_state_offenders(good, "streaming/x.py") == []

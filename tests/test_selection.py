@@ -105,10 +105,8 @@ def test_dsir_model_maintenance_stream_equals_batch(spark, tmp_path):
         dsir_ratio_vector,
         dsir_score_stream,
     )
-    from fotmobdatapipeline_spark.streaming.sketches import (
-        dsir_model_maintenance_sink,
-        read_dsir_model,
-    )
+    from fotmobdatapipeline_spark.streaming.sketches import dsir_model_maintenance_sink
+    from fotmobdatapipeline_spark.streaming.statefs import read_state
 
     docs = _docs(spark)
     B = 256
@@ -131,7 +129,7 @@ def test_dsir_model_maintenance_stream_equals_batch(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    streamed = read_dsir_model(spark, str(tmp_path / "model"))
+    streamed = read_state(spark, str(tmp_path / "model"))
     got = sorted(
         (r["bucket"], r["ct"], r["cs"]) for r in streamed.collect()
     )

@@ -8,6 +8,7 @@ semantics are exercised for real — only the scheme differs."""
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 
 def _fs(spark, tmp_path):
@@ -47,22 +48,100 @@ def test_listdir_dirs_only_and_delete(spark, tmp_path):
     assert not sfs.exists("m0")
 
 
-def test_publish_version_retention(spark, tmp_path):
-    """_publish_version keeps new + keep_versions priors, GCs the rest —
-    the sinks' shared GC path, driven directly."""
-    from fotmobdatapipeline_spark.streaming.sketches import (
-        _current_version,
-        _publish_version,
-    )
+def _counts(batch):
+    from pyspark.sql import functions as F
 
-    sfs, base = _fs(spark, tmp_path)
+    return batch.groupBy("k").agg(F.count("*").alias("n"))
+
+
+def _batch(spark, keys):
+    return spark.createDataFrame([(k,) for k in keys], "k string")
+
+
+def test_publish_version_retention(spark, tmp_path):
+    """Each fold publishes ``v{batch_id}`` behind CURRENT and keeps new +
+    keep_versions priors, GCing the rest — the sinks' shared publish
+    path, driven directly on static frames."""
+    from fotmobdatapipeline_spark.streaming.statefs import StateFs, fold_batch
+
+    base = str(tmp_path / "state")
+    apply = fold_batch(base, _counts, ["k"], ["n"], keep_versions=1)
     for b in range(4):
-        os.makedirs(os.path.join(base, f"v{b}"))
-        _publish_version(sfs, f"v{b}", keep_versions=1)
-    assert _current_version(base, spark) == "v3"
-    assert _current_version(base) == "v3"  # spark-less local fallback agrees
+        apply(_batch(spark, ["a", "b"][: b % 2 + 1]), b)
+    assert StateFs(spark, base).read_text("CURRENT") == "v3"
     dirs = sorted(d for d in os.listdir(base) if d.startswith("v"))
     assert dirs == ["v2", "v3"], dirs
+
+
+@contextmanager
+def _job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def _snapshot(base):
+    """Every file under the state dir with its bytes."""
+    out = {}
+    for root, _, files in os.walk(base):
+        for f in files:
+            p = os.path.join(root, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, base)] = fh.read()
+    return out
+
+
+def test_fold_replay_is_a_pointer_read_with_no_spark_job(spark, tmp_path):
+    """The replay guard reads the batch id from the CURRENT pointer's
+    name: replaying batches 1 and 0 after both committed leaves CURRENT
+    at v1, every stored byte unchanged, no new version dir, and runs no
+    Spark job (a guard that aggregates ``last_batch`` runs one per
+    replay)."""
+    import time
+
+    from fotmobdatapipeline_spark.streaming.statefs import (
+        StateFs,
+        fold_batch,
+        read_state,
+    )
+
+    base = str(tmp_path / "state")
+    apply = fold_batch(base, _counts, ["k"], ["n"])
+    b0, b1 = _batch(spark, ["a", "b", "a"]), _batch(spark, ["b", "c"])
+    apply(b0, 0)
+    apply(b1, 1)
+    before = _snapshot(base)
+    rows = sorted(map(tuple, read_state(spark, base).collect()))
+    assert rows == [("a", 2, 1), ("b", 2, 1), ("c", 1, 1)]
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "statefs-replay-test"
+    with _job_group(sc, group):
+        apply(b1, 1)
+        apply(b0, 0)
+    # The status store is fed asynchronously, in job order: once a later
+    # sentinel job shows up, any replay job would have been recorded.
+    with _job_group(sc, group + "-sentinel"):
+        spark.range(1).count()
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(group + "-sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never recorded"
+        time.sleep(0.1)
+    assert list(tracker.getJobIdsForGroup(group)) == []
+
+    assert StateFs(spark, base).read_text("CURRENT") == "v1"
+    assert _snapshot(base) == before
+    assert sorted(map(tuple, read_state(spark, base).collect())) == rows
+
+
+def test_read_state_before_first_commit_is_none(spark, tmp_path):
+    from fotmobdatapipeline_spark.streaming.statefs import read_state
+
+    assert read_state(spark, str(tmp_path / "never_written")) is None
 
 
 def test_interop_with_plain_local_writes(spark, tmp_path):

@@ -334,10 +334,8 @@ def test_cms_maintenance_stream_equals_batch(spark, tmp_path):
         register_python_sources,
     )
     from fotmobdatapipeline_spark.sources.registry import read_table
-    from fotmobdatapipeline_spark.streaming.sketches import (
-        cms_maintenance_sink,
-        read_cms_state,
-    )
+    from fotmobdatapipeline_spark.streaming.sketches import cms_maintenance_sink
+    from fotmobdatapipeline_spark.streaming.statefs import read_state
     from tests.conftest import SF_SMALL
 
     feed = str(tmp_path / "cmsfeed")
@@ -376,7 +374,7 @@ def test_cms_maintenance_stream_equals_batch(spark, tmp_path):
             # retry) — so a vanished version mid-read is re-polled, not
             # a failure.
             try:
-                state = read_cms_state(spark, state_path)
+                state = read_state(spark, state_path)
                 if state is not None:
                     got = {
                         (r["sketch_row"], r["bucket"]): r["cnt"]
@@ -390,10 +388,10 @@ def test_cms_maintenance_stream_equals_batch(spark, tmp_path):
         assert got == want
     finally:
         q.stop()
-    # Idempotence evidence: the stored last_batch is the replay guard —
-    # a re-delivered batch with id <= last_batch is skipped by the sink
-    # (the guard compares against this exact stored value).
-    state = read_cms_state(spark, state_path)
+    # Idempotence evidence: every stored row carries last_batch, the
+    # number the CURRENT pointer's name holds — a re-delivered batch
+    # with id <= last_batch is skipped by the sink.
+    state = read_state(spark, state_path)
     last = state.agg(F.max("last_batch")).first()[0]
     assert last is not None and last >= 0
     # And the final state is exactly the batch sketch (asserted above),
@@ -496,10 +494,8 @@ def test_hll_maintenance_stream_equals_batch(spark, tmp_path):
         register_python_sources,
     )
     from fotmobdatapipeline_spark.sources.registry import read_table
-    from fotmobdatapipeline_spark.streaming.sketches import (
-        hll_maintenance_sink,
-        read_hll_state,
-    )
+    from fotmobdatapipeline_spark.streaming.sketches import hll_maintenance_sink
+    from fotmobdatapipeline_spark.streaming.statefs import read_state
     from tests.conftest import SF_SMALL
 
     feed = str(tmp_path / "hllfeed")
@@ -534,7 +530,7 @@ def test_hll_maintenance_stream_equals_batch(spark, tmp_path):
             # re-polled, not a failure (same retention contract as the
             # CMS test above).
             try:
-                state = read_hll_state(spark, state_path)
+                state = read_state(spark, state_path)
                 if state is not None:
                     got = {r["reg_idx"]: r["max_rho"] for r in state.collect()}
                     if got == want:
@@ -545,9 +541,36 @@ def test_hll_maintenance_stream_equals_batch(spark, tmp_path):
         assert got == want
     finally:
         q.stop()
-    state = read_hll_state(spark, state_path)
+    state = read_state(spark, state_path)
     last = state.agg(F.max("last_batch")).first()[0]
     assert last is not None and last >= 0
+
+
+def test_hll_sink_keeps_max_rho_int_in_every_version(spark, tmp_path):
+    """The fold casts each merged value back to the increment's own
+    type: HLL's ``max_rho`` is ``int`` both in the first version (the
+    increment as it is) and in the merged one — a fold that cast every
+    value to bigint would change the stored schema from v1 on."""
+    from fotmobdatapipeline_spark.streaming.sketches import hll_maintenance_sink
+
+    src = tmp_path / "src"
+    for i, keys in enumerate((["a", "b", "c"], ["c", "d"])):
+        spark.createDataFrame([(k,) for k in keys], "k string").coalesce(1).write.parquet(
+            str(src / f"b{i}")
+        )
+    state = str(tmp_path / "hll_state")
+    q = hll_maintenance_sink(
+        spark.readStream.schema("k string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src) + "/*"),
+        path=state,
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    q.processAllAvailable()
+    q.stop()
+    for v in ("v0", "v1"):
+        types = dict(spark.read.parquet(f"{state}/{v}").dtypes)
+        assert types["max_rho"] == "int", (v, types)
 
 
 def test_interval_left_join_stream_matches_batch(spark, tmp_path):
@@ -744,10 +767,8 @@ def test_sketch_sink_retention_survives_slow_reader(spark, tmp_path):
     import datetime as dt
     import os
 
-    from fotmobdatapipeline_spark.streaming.sketches import (
-        _current_version,
-        cms_maintenance_sink,
-    )
+    from fotmobdatapipeline_spark.streaming.sketches import cms_maintenance_sink
+    from fotmobdatapipeline_spark.streaming.statefs import StateFs
 
     feed_dir = str(tmp_path / "retfeed")
     schema = "k string, ts timestamp"
@@ -773,7 +794,8 @@ def test_sketch_sink_retention_survives_slow_reader(spark, tmp_path):
     state = str(tmp_path / "ret_state")
     push(["a", "b"])
     drain()
-    pinned = _current_version(state)  # the slow reader resolves CURRENT here
+    # the slow reader resolves CURRENT here
+    pinned = StateFs(spark, state).read_text("CURRENT")
     pinned_path = os.path.join(state, pinned)
 
     push(["c"])
@@ -784,7 +806,7 @@ def test_sketch_sink_retention_survives_slow_reader(spark, tmp_path):
     assert os.path.isdir(pinned_path)
     assert spark.read.parquet(pinned_path).count() > 0
     # CURRENT moved on; retention kept exactly new + 2 priors.
-    cur = _current_version(state)
+    cur = StateFs(spark, state).read_text("CURRENT")
     assert cur != pinned
     versions = sorted(d for d in os.listdir(state) if d.startswith("v"))
     assert len(versions) == 3, versions
