@@ -12,7 +12,9 @@ sql/create_looker_data_table.sql (sql:N).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -26,7 +28,6 @@ from pyspark.sql.types import (
 
 from fotmobdatapipeline_spark.functions.cleaning import canonicalize_values, rename_columns
 from fotmobdatapipeline_spark.lineage import share
-from fotmobdatapipeline_spark.operators.star import build_dim, build_fact, denormalize
 
 # Schema of one FotMob matchDetails payload as consumed by the reference
 # (dag:74-80); explicit so ingestion never depends on sampling inference.
@@ -267,51 +268,94 @@ def clean_shots(flat: DataFrame) -> DataFrame:
     return canonicalize_values(renamed, ["home_team_name", "away_team_name"], TEAM_NAME_CANON)
 
 
-def build_team_dim(clean: DataFrame) -> DataFrame:
-    """D3 (dag:128-129): union of (home, away) projections → distinct →
-    surrogate key.  The reference's keys are accidentally non-contiguous;
-    we emit dense deterministic keys and tests assert join integrity, not
-    the accident (SURVEY.md §4.3-2)."""
-    home = clean.select(
-        F.col("home_team_name").alias("team_name"), F.col("home_team_id").alias("teamId")
+# The five dims: surrogate key and natural keys (D1-D6, dag:124-141).
+DIMS = {
+    "match_dim": ("match_id", ("matchId",)),
+    "team_dim": ("team_id", ("teamId", "team_name")),
+    "player_dim": ("player_id", ("player_name",)),  # keyed on name, dag:132
+    "shot_type_dim": ("shot_type_id", ("shot_type",)),
+    "event_type_dim": ("event_type_id", ("event_type", "situation")),
+}
+# Every natural-key column, each dim's own keys in their own order, so
+# ordering a dim's rows by all of them (the others are NULL) orders it
+# by its natural keys.
+DIM_KEY_COLS = tuple(c for _key, cols in DIMS.values() for c in cols)
+
+
+def build_dims_frame(clean: DataFrame) -> DataFrame:
+    """All five dims as one frame: the union of their natural-key
+    projections, tagged with the dim's name in ``__dim`` and NULL in the
+    other dims' key columns, one ``distinct``, and the surrogate key
+    ``__key = row_number() OVER (PARTITION BY __dim ORDER BY <all key
+    columns> ASC NULLS FIRST) - 1``.  Within a dim the other columns are
+    all NULL, so each dim gets the dense 0..n-1 keys in natural-key order
+    that :func:`~fotmobdatapipeline_spark.operators.star.build_dim` would
+    give it, from one distinct and one sort partitioned by dim instead of
+    five of each.  The team dim projects (home, away) team pairs (D3,
+    dag:128-129)."""
+    home, away = (
+        clean.select(
+            F.col(f"{side}_team_id").alias("teamId"),
+            F.col(f"{side}_team_name").alias("team_name"),
+        )
+        for side in ("home", "away")
     )
-    away = clean.select(
-        F.col("away_team_name").alias("team_name"), F.col("away_team_id").alias("teamId")
+    projections = [("team_dim", home), ("team_dim", away)] + [
+        (name, clean.select(*cols)) for name, (_key, cols) in DIMS.items() if name != "team_dim"
+    ]
+    tagged = [p.select(F.lit(name).alias("__dim"), "*") for name, p in projections]
+    union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
+    w = Window.partitionBy("__dim").orderBy(*[F.col(c).asc_nulls_first() for c in DIM_KEY_COLS])
+    return union.distinct().select(
+        "__dim", (F.row_number().over(w) - F.lit(1)).cast("long").alias("__key"), *DIM_KEY_COLS
     )
-    return build_dim(home.unionByName(away), ["teamId", "team_name"], "team_id")
 
 
 def build_star(clean: DataFrame) -> dict[str, DataFrame]:
-    """D1-D6 + J1 + P3 (dag:124-153): five dims + the fact table.
+    """D1-D6 + J1 + P3 (dag:124-153) and Q1 (sql:1-26): the five dims,
+    the fact table and the ``looker_data`` reporting table.
 
-    Each dim is built once: it is shared (``lineage.share``), so its own
-    write, its fact lookup and its ``looker_data`` lookup all read the
-    same materialized rows instead of each re-running the distinct and
-    the dense-key sort.  Under AQE, checkpointing a dim runs its shuffle
-    stages (the distinct and the single-partition sort feed) here, at
-    build time; the key assignment runs at the dim's first use.  The
-    fact is not checkpointed: the ``team_lookup`` guard below still
-    raises when the fact executes."""
-    match_dim, team_dim, player_dim, shot_type_dim, event_type_dim = (
-        share(dim)
-        for dim in (
-            build_dim(clean, ["matchId"], "match_id"),
-            build_team_dim(clean),
-            build_dim(clean, ["player_name"], "player_id"),  # keyed on name, dag:132
-            build_dim(clean, ["shot_type"], "shot_type_id"),
-            build_dim(clean, ["event_type", "situation"], "event_type_id"),
+    Two frames are shared (``lineage.share``) and every table is a
+    filter or projection of one of them:
+
+    * the dims frame (:func:`build_dims_frame`): each dim is a filter
+      and select of it;
+    * the keyed frame: ``clean`` joined once to the five dim lookups
+      (broadcast, inner, on natural keys), holding only the columns the
+      two tables below read.  ``fact_table`` keeps its
+      surrogate keys and measures; ``looker_data`` keeps the measures
+      and the natural keys, which equal the dim attributes they were
+      looked up by, and the fact's inner joins already drop every row
+      the 5-way reporting join would drop.
+
+    Under AQE, sharing a frame plans it, which runs the stages below it
+    here, as eight jobs: the dims' distinct and their sort feed, the
+    team lookup's aggregate (the first reader of the dims frame, so the
+    key assignment runs in it) and the five lookup broadcasts.  The
+    ``team_lookup`` guard therefore raises inside this call, before any
+    table is written.  Only the join of the shots to the lookups is
+    left; it runs once, at the keyed frame's first use."""
+    dims_frame = share(build_dims_frame(clean))
+    dims = {
+        name: dims_frame.filter(F.col("__dim") == name).select(
+            F.col("__key").alias(key), *cols
         )
-    )
+        for name, (key, cols) in DIMS.items()
+    }
 
     # J1: the shot joins team_dim on its own teamId (the shooting team,
     # dag:146) — join on teamId only, so the dim lookup must be unique per
-    # teamId; team_name rides along from the dim at denormalize time.
+    # teamId; it carries that one row's team_name for looker_data.
     # Uniqueness is enforced IN the lazy plan: if an un-canonicalized name
     # variant ever gives one teamId two surrogate keys, the lookup raises
     # at execution instead of silently fanning out fact rows.
     team_lookup = (
-        team_dim.groupBy("teamId")
-        .agg(F.min("team_id").alias("team_id"), F.count("*").alias("__n_names"))
+        dims["team_dim"].groupBy("teamId")
+        .agg(
+            F.min("team_id").alias("team_id"),
+            F.min("team_name").alias("team_name"),
+            F.count("*").alias("__n_names"),
+        )
         .select(
             "teamId",
             F.when(F.col("__n_names") == 1, F.col("team_id"))
@@ -328,45 +372,28 @@ def build_star(clean: DataFrame) -> dict[str, DataFrame]:
                 )
             )
             .alias("team_id"),
+            "team_name",
         )
     )
-    fact = build_fact(
-        clean,
-        dims=[
-            (match_dim, ["matchId"], "match_id"),
-            (team_lookup, ["teamId"], "team_id"),
-            (player_dim, ["player_name"], "player_id"),
-            (shot_type_dim, ["shot_type"], "shot_type_id"),
-            (event_type_dim, ["event_type", "situation"], "event_type_id"),
-        ],
-        measures=FACT_MEASURES,
-        extra_keys=["shot_id"],
-    )
+    keyed = clean
+    for lookup, on in (
+        (dims["match_dim"], ["matchId"]),
+        (team_lookup, ["teamId"]),
+        (dims["player_dim"], ["player_name"]),
+        (dims["shot_type_dim"], ["shot_type"]),
+        (dims["event_type_dim"], ["event_type", "situation"]),
+    ):
+        keyed = keyed.join(F.broadcast(lookup), on=on, how="inner")
+    fact_cols = ["shot_id", *(key for key, _cols in DIMS.values()), *FACT_MEASURES]
+    # match_dim contributes no columns: FK-integrity only, sql:21.
+    looker_cols = ["shot_id", *FACT_MEASURES, "player_name", "team_name", "shot_type",
+                   "event_type", "situation"]
+    keyed = share(keyed.select(*dict.fromkeys(fact_cols + looker_cols)))
     return {
-        "match_dim": match_dim,
-        "team_dim": team_dim,
-        "player_dim": player_dim,
-        "shot_type_dim": shot_type_dim,
-        "event_type_dim": event_type_dim,
-        "fact_table": fact,
+        **dims,
+        "fact_table": keyed.select(*fact_cols),
+        "looker_data": keyed.select(*looker_cols),
     }
-
-
-def build_looker_data(star: dict[str, DataFrame]) -> DataFrame:
-    """Q1 (sql:1-26): the 5-way denormalizing reporting join.  match_dim
-    is joined but contributes no columns — FK-integrity filter only,
-    faithful to sql:21."""
-    return denormalize(
-        star["fact_table"],
-        dims=[
-            (star["match_dim"], "match_id", []),
-            (star["player_dim"], "player_id", ["player_name"]),
-            (star["team_dim"], "team_id", ["team_name"]),  # team_id is unique per row
-            (star["shot_type_dim"], "shot_type_id", ["shot_type"]),
-            (star["event_type_dim"], "event_type_id", ["event_type", "situation"]),
-        ],
-        measures=["shot_id", *FACT_MEASURES],
-    )
 
 
 def player_xg_leaderboard(looker: DataFrame, k: int = 10) -> DataFrame:
@@ -387,20 +414,18 @@ def player_xg_leaderboard(looker: DataFrame, k: int = 10) -> DataFrame:
 def run_pipeline(spark, matches_path: str) -> dict[str, DataFrame]:
     """EP1 equivalent: the extract→transform chain, flattened once and
     shared by every table, as the reference flattens once and loads six
-    tables from the result (dag:95-183).  Callers write each returned
-    table (parquet/Delta) to realize the load stage.
+    tables from the result (dag:95-183).  Returns the seven tables of
+    :func:`build_star`; callers write them (parquet/Delta) to realize
+    the load stage.
 
-    The parsed, cleaned shots are shared (``lineage.share``, lazy with no
-    checkpoint directory): there is no shuffle below it, so creating it
-    runs nothing, and its first consumer parses the landing zone once for
-    all seven tables.  The five dims are shared the same way
-    (:func:`build_star`).  Under AQE, checkpointing a dim runs the dim's
-    shuffle stages, so that first consumer is this call: it parses the
-    zone and runs those stages, and the table writes read checkpoint
-    blocks.  Every call makes fresh checkpoints, freed when their frames
-    are garbage-collected, so a call over a regenerated zone reads the
-    new files, never an earlier call's rows."""
-    clean = share(clean_shots(flatten_shots(read_matches(spark, matches_path))))
-    star = build_star(clean)
-    star["looker_data"] = build_looker_data(star)
-    return star
+    Three frames are shared (``lineage.share``, lazy with no checkpoint
+    directory): the parsed, cleaned shots, the dims frame and the keyed
+    frame (see :func:`build_star`).  Under AQE this call runs the jobs
+    that plan them: the zone is parsed once, into the shots' checkpoint,
+    by the dims' distinct; then the dims' sort feed, the team lookup's
+    aggregate and the five lookup broadcasts run, and the team-lookup
+    guard raises here on an ambiguous teamId.  The table writes read
+    checkpoint blocks.  Every call makes fresh checkpoints, freed when
+    their frames are garbage-collected, so a call over a regenerated
+    zone reads the new files, never an earlier call's rows."""
+    return build_star(share(clean_shots(flatten_shots(read_matches(spark, matches_path)))))

@@ -43,11 +43,13 @@ def get_spark(
         # injection with thresholds overridden.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # NOTE (r15, measured): raising spark.sql.codegen.cache.maxEntries
-        # (static conf, default 100) was tried for the 100-query bench
-        # session and measured FLAT on the slowest-32 subset (195.4 s at
-        # 100 vs 203.4 s at 4096 — inside the box band).  Left at the
-        # default; revisit only with a measurement that moves.
+        # Codegen cache (static conf, one cache per JVM, default 100
+        # entries in 4 LRU segments).  Measured at local[2]: one pass of
+        # the benchmark's shots_etl workload generated 101 distinct
+        # classes and one of llm_data 123; at the default, 35 and 64 of
+        # them were evicted and compiled again by Janino (and then by
+        # the JIT) on every warm pass.  At 1024 a warm pass compiles 0.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
@@ -109,7 +111,9 @@ def ship_package(spark: SparkSession) -> None:
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply engine settings to an externally-created session (the driver
-    hands us one in ``entry(spark)``); only runtime-settable confs."""
+    hands us one in ``entry(spark)``); only runtime-settable confs.  The
+    static confs of :func:`get_spark`, such as the codegen cache size,
+    are fixed when the session's JVM starts and cannot be set here."""
     for k, v in {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",

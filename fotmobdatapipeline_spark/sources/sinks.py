@@ -111,10 +111,13 @@ def write_star(tables: dict[str, DataFrame], base_path: str, mode: str = "overwr
     attributed to the caller.
 
     Tables from :func:`fotmobdatapipeline_spark.fotmob.run_pipeline`
-    share their parsed shots and their dims through lazy checkpoints:
-    the writes read the shared frames' checkpoint blocks (the first
-    write to reach a dim runs its key assignment), so the landing zone
-    is parsed once and each dim is built once for all seven writes."""
+    are filters and projections of two shared frames, the dims frame
+    and the keyed frame, whose shuffles and broadcasts already ran in
+    ``run_pipeline``.  Each write is one job that reads checkpoint
+    blocks: the five dims read the dims frame's, and ``fact_table``
+    and ``looker_data`` the keyed frame's, whose join of the shots to
+    the broadcast lookups runs once, inside those two writes.  The
+    landing zone is not parsed again."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target

@@ -337,7 +337,12 @@ def _job_group(sc, group: str):
 
 def test_write_star_jobs_join_the_callers_job_group(spark, zone, tmp_path):
     """Every job write_star runs — on its pool threads — carries the
-    caller's job group, so a caller can attribute (and cancel) them."""
+    caller's job group, so a caller can attribute (and cancel) them.
+    run_pipeline + write_star run at most 15 jobs: eight plan the shared
+    frames (the dims' distinct and sort feed, the team lookup's
+    aggregate, five lookup broadcasts) and each of the seven writes is
+    one.  Five separately built dims and a reporting table that repeated
+    the fact's joins ran 34."""
     from fotmobdatapipeline_spark.fotmob import run_pipeline
     from fotmobdatapipeline_spark.sources.sinks import write_star
 
@@ -356,8 +361,55 @@ def test_write_star_jobs_join_the_callers_job_group(spark, zone, tmp_path):
         assert time.monotonic() < deadline, "sentinel job never recorded"
         time.sleep(0.1)
     grouped = tracker.getJobIdsForGroup(group)
-    assert len(grouped) >= len(STAR_TABLES)  # at least one job per write
+    assert len(STAR_TABLES) <= len(grouped) <= 15
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_looker_data_equals_the_five_way_reporting_join(star):
+    """looker_data, projected from the keyed frame, equals the 5-way
+    denormalizing join of the returned fact and dims (sql:1-26): the
+    same rows as a multiset and the same schema, nullability included."""
+    from collections import Counter
+
+    from fotmobdatapipeline_spark.fotmob import FACT_MEASURES
+    from fotmobdatapipeline_spark.operators.star import denormalize
+
+    want = denormalize(
+        star["fact_table"],
+        dims=[
+            (star["match_dim"], "match_id", []),
+            (star["player_dim"], "player_id", ["player_name"]),
+            (star["team_dim"], "team_id", ["team_name"]),
+            (star["shot_type_dim"], "shot_type_id", ["shot_type"]),
+            (star["event_type_dim"], "event_type_id", ["event_type", "situation"]),
+        ],
+        measures=["shot_id", *FACT_MEASURES],
+    )
+    got = star["looker_data"]
+    assert got.schema == want.schema
+    rows = Counter(tuple(r) for r in got.collect())
+    assert sum(rows.values()) == _n_shots(_make_matches())
+    assert rows == Counter(tuple(r) for r in want.collect())
+
+
+def test_a_warm_rerun_compiles_no_class(spark, zone, tmp_path):
+    """After one run, an identical run of run_pipeline -> write_star ->
+    player_xg_leaderboard in the same session finds every generated
+    class in the codegen cache (the default 100 entries held too few,
+    and dozens were compiled again on every run)."""
+    from fotmobdatapipeline_spark.fotmob import player_xg_leaderboard, run_pipeline
+    from fotmobdatapipeline_spark.sources.sinks import write_star
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def one_run():
+        paths = write_star(run_pipeline(spark, zone), str(tmp_path / "star"))
+        return player_xg_leaderboard(spark.read.parquet(paths["looker_data"])).collect()
+
+    first = one_run()
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    assert one_run() == first
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - compiled == 0
 
 
 def test_importing_plans_has_no_filesystem_side_effect(tmp_path):

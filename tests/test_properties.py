@@ -259,8 +259,10 @@ def test_salted_join_rejects_build_side_outer(spark):
 
 def test_team_lookup_raises_on_ambiguous_team_id(spark):
     """fotmob build_star: a teamId carrying two canonical names (canon
-    map gap) must fail the fact build loudly, never silently fan out
-    shot rows."""
+    map gap) must fail the star build loudly, never silently fan out
+    shot rows.  Under AQE the guard fires inside ``build_star``, which
+    runs the team-lookup broadcast when it shares the keyed frame; the
+    fact's collect covers a session without AQE."""
     import pytest
 
     from fotmobdatapipeline_spark import fotmob
@@ -276,9 +278,8 @@ def test_team_lookup_raises_on_ambiguous_team_id(spark):
     row_a = dict(base, shot_id=1, home_team_name="Arsenal")
     row_b = dict(base, shot_id=2, home_team_name="Arsenal FC")
     clean = spark.createDataFrame([row_a, row_b])
-    star = fotmob.build_star(clean)
     with pytest.raises(Exception, match="maps to multiple team_dim rows"):
-        star["fact_table"].collect()
+        fotmob.build_star(clean)["fact_table"].collect()
 
 
 @given(
